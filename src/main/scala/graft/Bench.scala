@@ -1,39 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; this catalog
-      // compiles ~3× that many distinct codegen units, so at the default
-      // size every pass evicts and recompiles plans that ran seconds ago
-      // (the round-4 +18% "regression" on unchanged plans — scalar_math
-      // 1.14→2.43s — was exactly this churn once the catalog crossed the
-      // cache size). Sized to hold the whole catalog with headroom.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Round-9 drift fixes: shuffle files and broadcast blocks are only
-      // reclaimed when the DRIVER GC collects their references — at this
-      // heap size GC can stay silent for most of a 1,008-execution run,
-      // so MapOutputTracker/BlockManager state grows monotonically and
-      // every later query pays the bookkeeping tax. The periodic-GC
-      // interval (default 30min — longer than the whole run) makes the
-      // ContextCleaner actually fire.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // The status stores retain per-execution plan graphs and per-stage
-      // metadata even with the UI off; at 336 queries × 3 passes ×
-      // multiple jobs each, the defaults (1000 executions / 1000 stages)
-      // hold thousands of plan strings on the driver heap for the run's
-      // lifetime. Bench reads none of it — keep a diagnostic stub only.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "64")
-      .config("spark.ui.retainedStages", "128")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Three full passes at the target sf. Reported numbers:
     //  - queries      = per-query MIN over passes (steady-state: tracks
@@ -117,8 +88,9 @@ object Bench {
     val passesJson = passMeta.result().mkString("[", ",", "]")
     // Echo the EFFECTIVE core count into the artifact: round 11's driver
     // flagged `suspect_cpus_ignored` because nothing in the JSON proved
-    // `$SPARK_GRAFT_CPUS` reached the master string — `cpus` is the env
-    // value, `parallelism` is what the scheduler actually runs with.
+    // `$SPARK_GRAFT_CPUS` reached the master string — `cpus` is the
+    // resolved core count (`GraftSession.cores`), `parallelism` is what
+    // the scheduler actually runs with.
     val cpuEcho =
       s""""cpus":$cpus,"parallelism":${spark.sparkContext.defaultParallelism},"""
     val full =

@@ -17,11 +17,11 @@ object Tables {
   /** Parquet SCHEMA memo, keyed by [[fingerprint]] (so a regenerated
     * fixture re-infers). `spark.read.parquet` without a schema runs a
     * footer-inference job on EVERY call — measured 75 ms/call warm at
-    * sf0.1 vs 8 ms with the schema supplied (ProbeRead) — and a plan
-    * builder calls [[table]] once per table REFERENCE, inside the
-    * bench's timed window. Metadata-only memoization (the
-    * [[rowCountCache]] discipline): every query still computes results
-    * from the parquet files on every run. */
+    * sf0.1 vs 8 ms with the schema supplied (the `ProbeRead` probe, now
+    * only in the git history) — and a plan builder calls [[table]] once
+    * per table REFERENCE, inside the bench's timed window. Metadata-only
+    * memoization (the [[rowCountCache]] discipline): every query still
+    * computes results from the parquet files on every run. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 

@@ -2009,12 +2009,10 @@ object Dedup {
               greatest(col("a"), col("n.b")).as("doc_b"),
               col("pa"), col("n.pb").as("pb"))
     val simPpm = expr("(1000000 * (ml - dist)) div nullif(ml, 0)")
-    // DP kernel AFTER the presentation sort: rangepartitioning's sampling
-    // pass re-executes the final pre-sort stage, and with levenshtein in
-    // it the whole O(cand·prefix²) kernel ran twice (probed: 2.9 s with
-    // the kernel under the sort, 1.5 s without). Sorting the narrow
-    // candidate rows first and projecting the kernel above the sort keeps
-    // the declared output order and runs the DP once.
+    // The O(cand·prefix²) DP kernel is the final projection over the
+    // narrow candidate rows. Keep any sort off this result: a range
+    // sort's sampling pass re-executes the stage below it, which ran the
+    // DP twice (2.9 s warm with a presentation sort, 1.5 s without).
     cand
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("pa"), col("pb")).cast("long").as("dist"),

@@ -501,9 +501,8 @@ object Geo {
     * id, so a position can never place more than its 3 smallest ids
     * in any top-3. */
   private def knnPlan(s: SparkSession, d: String,
-                      probeT: Synth, buildT: Synth,
-                      forcedH: Option[Int] = None): DataFrame = {
-    val e = Cell >> forcedH.getOrElse(deriveH(s, d, probeT, KnnBudget))
+                      probeT: Synth, buildT: Synth): DataFrame = {
+    val e = Cell >> deriveH(s, d, probeT, KnnBudget)
     val cpos = positionsOf(s, d, probeT, e)
     val sup = positionsOf(s, d, buildT, e)
       .select(col("pk").as("spk"), col("lat").as("slat"),
@@ -771,13 +770,6 @@ object Geo {
     * cell-assignment column with. */
   private[graft] def adaptiveCellOf(s: SparkSession, d: String): Long =
     Cell >> deriveH(s, d, LatCust)
-
-  /** Test/measurement hooks (GeoSpec, GeoAb): the spread self-join
-    * corpus and a forced-cell kNN — the fixed-2°-grid A/B evidence. */
-  private[graft] def spreadSelf: Synth = SpOrders
-  private[graft] def knnPlanAt(s: SparkSession, d: String,
-                               forcedH: Option[Int]): DataFrame =
-    knnPlan(s, d, SpOrders, SpCust, forcedH)
 
   /** Test hook: both dbscan plans on one corpus, exactness of the
     * dense-cell rewrite checked by value equality. */

@@ -185,12 +185,7 @@ object JobRunner {
   /** Executable entry: mirrors the reference job's stdout contract — the
     * last `[out]`-prefixed line is the result JSON. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     try runFromEnv(spark, sys.env.toMap).foreach(println)
     finally spark.stop()

@@ -19,9 +19,6 @@ object Soak {
     val sfDir = args(0)
     val outFile = args(1)
     val names = args(2).split(",").toSeq
-    // static conf — must be on the SparkConf before the session exists
-    // (SparkConf picks up spark.* system properties)
-    System.setProperty("spark.sql.codegen.cache.maxEntries", "4096")
     val spark = graft.GraftSession.local()
     args.lift(3).foreach(_.split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

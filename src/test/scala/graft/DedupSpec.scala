@@ -110,8 +110,7 @@ class DedupSpec extends SparkSpec {
     assert(!plan.contains("Window"),
       s"shingling must not need a window:\n${plan.take(600)}")
     assert(plan.contains("Generate"), "expected the generator in the plan")
-    // SQL surface via LATERAL VIEW after extension registration
-    graft.plans.GraftExtensions.register(spark)
+    // SQL surface via LATERAL VIEW
     Tables.documents(spark, sf0001).limit(5).createOrReplaceTempView("sgl_docs")
     val viaSql = spark.sql(
       """SELECT doc_id, sgl, n_sgl FROM sgl_docs
@@ -128,7 +127,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ordered_pairs: streams i<j pairs, skips null elements, SQL-usable") {
-    graft.plans.GraftExtensions.register(spark)
     // null elements in the array must be skipped, not NPE (the expression
     // is generic over array<struct> with containsNull=true)
     val rows = spark.sql(
@@ -161,7 +159,6 @@ class DedupSpec extends SparkSpec {
     // duplicate texts get identical signatures
     val spark2 = spark
     import spark2.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val two = Seq(("a b c d", 1), ("a b c d", 2)).toDF("text", "i")
     two.createOrReplaceTempView("sim_docs")
     val sigs = spark.sql("SELECT simhash64(text) AS s FROM sim_docs")
@@ -197,7 +194,6 @@ class DedupSpec extends SparkSpec {
 
   test("minhash_sig is SQL-registered and matches the DataFrame path") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     Tables.documents(spark, sf0001).createOrReplaceTempView("mh_docs")
     val viaSql = spark.sql(
         "SELECT doc_id, minhash_sig(text, 3) AS sig FROM mh_docs")

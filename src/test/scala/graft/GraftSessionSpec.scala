@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
 /** The front-door contract: a [[GraftSession]] session runs the engine's
   * SQL functions and queries without further setup — including when a
   * session already exists in the JVM (the post-hoc registration path).
@@ -7,8 +9,14 @@ package graft
 class GraftSessionSpec extends SparkSpec {
 
   test("GraftSession.local: native SQL functions resolve, queries run") {
-    spark // force the shared session first — exercises the getOrCreate path
+    // The shared session carries the extension from its build; dropping
+    // a function leaves an existing session without it, which is what
+    // adoption must repair by registering post-hoc.
+    val cosine = FunctionIdentifier("cosine_sim")
+    assert(spark.sessionState.functionRegistry.dropFunction(cosine))
+    assert(!spark.sessionState.functionRegistry.functionExists(cosine))
     val s = GraftSession.local(2)
+    assert(s eq spark, "an existing session is adopted, not replaced")
     val one = s.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
       .first().getDouble(0)

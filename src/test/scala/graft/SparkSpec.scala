@@ -12,17 +12,17 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The only confs the test session adds to [[GraftSession.profile]]
+    * (`SessionProfileSpec` holds the suite to this list). */
+  val testOnlyConfs: Map[String, String] = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("warehouse").toString,
+    // full PushedFilters in plan audits
+    "spark.sql.maxMetadataStringLength" -> "10000")
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "10000") // full PushedFilters in plan audits
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(extra = testOnlyConfs)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -25,7 +25,6 @@ class SqlSurfaceSpec extends SparkSpec {
     }).sortBy(_.mkString("\u0001"))
 
   private def init(): Unit = {
-    GraftExtensions.register(spark)
     Tables.documents(spark, sf0001).createOrReplaceTempView("graft_docs")
     Tables.embeddings(spark, sf0001).createOrReplaceTempView("graft_emb")
     Tables.orders(spark, sf0001).createOrReplaceTempView("graft_orders")

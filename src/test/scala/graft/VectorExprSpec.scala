@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.VectorOps
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** Native CosineSimilarity expression: correctness vs the HOF
@@ -39,7 +38,6 @@ class VectorExprSpec extends SparkSpec {
 
   test("cosine edge cases: null inputs -> null, zero vector -> null, " +
        "dimension mismatch -> error") {
-    GraftExtensions.register(spark)
     val rows = spark.sql(
       """SELECT cosine_sim(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) AS null_left,
         |       cosine_sim(array(1.0d), CAST(NULL AS ARRAY<DOUBLE>)) AS null_right,
@@ -60,7 +58,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("cosine_sim is callable from SQL after extension registration") {
-    GraftExtensions.register(spark)
     val one = spark.sql(
       "SELECT cosine_sim(array(1.0d, 2.0d), array(2.0d, 4.0d)) AS c")
       .collect()(0).getDouble(0)

@@ -30,7 +30,6 @@ class ZOrderSpec extends SparkSpec {
     assert(ucmp(ZOrderUtil.interleave(4, -3), ZOrderUtil.interleave(4, 9)))
 
     // SQL surface
-    graft.plans.GraftExtensions.register(spark)
     val viaSql = spark.sql("SELECT interleave_bits(3, 5) AS z").collect()(0).getLong(0)
     assert(viaSql === ZOrderUtil.interleave(3, 5))
   }

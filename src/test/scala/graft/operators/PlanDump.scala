@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan snapshot tool for the optimization rounds:
@@ -18,11 +17,7 @@ object PlanDump {
     val out = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(out))
     val qs = graft.SparkEntry.catalog
