@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
   *  - [[delete]] = empty project: partition drop across every store
   *    (:360-390 `_empty_project`)
   *
-  * All writes overwrite per-partition (idempotent re-import — the
-  * reference wipes and reloads a project per commit); all per-project
-  * reads prune to one partition directory. At 100 TB: imports for
+  * A put replaces the project's partition in every store (idempotent
+  * re-import — the reference wipes and reloads a project per commit); all
+  * per-project reads prune to one partition directory. At 100 TB: imports for
   * different projects touch disjoint partitions and parallelize
   * trivially; no operation ever scans another project's data.
   */
@@ -53,23 +53,22 @@ final class Etl(root: String,
 
   /** Import a project from one or more commit directories in ONE load —
     * the reference loads every commit of a push cumulatively
-    * (fhir_import_export.py:455-470), so per-commit dynamic-partition
-    * overwrites would keep only the last commit. The project is wiped
-    * first ("wipe and reload", :360-390 `_empty_project` semantics), so a
+    * (fhir_import_export.py:455-470), so per-commit puts would keep only
+    * the last commit. Each store's project directory is replaced whole
+    * ("wipe and reload", :360-390 `_empty_project` semantics), so a
     * re-import where a resource file disappeared leaves no stale partition
-    * behind. `limit` caps rows per flat table (`load_flat(limit=...)`,
-    * :231-258). */
+    * behind; all seven are staged before any is swapped in, so a failed
+    * import leaves the old project readable everywhere. `limit` caps rows
+    * per flat table (`load_flat(limit=...)`, :231-258). */
   def put(spark: SparkSession, projectId: String, commitDirs: Seq[String],
           limit: Option[Int]): Unit = {
     require(commitDirs.nonEmpty, "at least one commit dir required")
-    // validate BEFORE the wipe: a typo'd meta_path must fail the job with
-    // the old data intact, not destroy the project and then load nothing
+    // a typo'd meta_path must fail the job, not load an empty project
     // (missing resource FILES inside an existing dir are still fine —
     // that's the reference's "/dev/null" empty-load)
     val missing = commitDirs.filterNot(d => new java.io.File(d).isDirectory)
     require(missing.isEmpty,
       s"commit dir(s) not found: ${missing.mkString(", ")}")
-    delete(spark, projectId)
     def readAll(name: String): DataFrame =
       commitDirs.map(read(spark, _, name, dict(name), projectId))
         .reduce(_ unionByName _)
@@ -82,25 +81,6 @@ final class Etl(root: String,
     val typed = Seq("ResearchStudy" -> study, "Patient" -> patient,
                     "Observation" -> obs, "DocumentReference" -> docRef)
 
-    // full-fidelity store (the ES `fhir` index, :291-293)
-    fhirRaw.put(typed.map { case (t, df) =>
-      df.select(col("project_id"), lit(t).as("resource_type"), col("id"),
-                to_json(struct(df.columns.toIndexedSeq.map(col): _*))
-                  .as("resource_json"))
-    }.reduce(_ unionByName _))
-
-    // graph store (meta_upload, :224-226): one vertex per resource, edges
-    // from the child->patient references
-    vertices.put(typed.map { case (t, df) =>
-      df.select(col("project_id"), col("id"), lit(t).as("label"))
-    }.reduce(_ unionByName _))
-    edges.put(
-      obs.select(col("project_id"), col("id").as("src"),
-                 col("patient_id").as("dst"), lit("observes").as("label"))
-        .unionByName(
-          docRef.select(col("project_id"), col("id").as("src"),
-                        col("patient_id").as("dst"), lit("documents").as("label"))))
-
     // flat tables (load_flat x3, :230-258); patient denormalized with
     // related-resource aggregates (denormalize_patient, :229) —
     // aggregate-then-join so the shuffle carries one row per patient
@@ -109,21 +89,38 @@ final class Etl(root: String,
            avg(col("value_numeric")).as("avg_value"))
     val docStats = docRef.groupBy(col("patient_id").as("id"))
       .agg(count(lit(1)).as("file_count"), sum(col("content_size")).as("total_bytes"))
-    flatPatient.put(capped(SchemaFlattener.flatten(patient)
-      .join(obsStats, Seq("id"), "left")
-      .join(docStats, Seq("id"), "left")
-      .na.fill(0, Seq("observation_count", "file_count", "total_bytes"))))
-    flatObservation.put(capped(SchemaFlattener.flatten(obs)))
-    flatFile.put(capped(SchemaFlattener.flatten(docRef)))
-
-    // discovery summary (:261-289): one row per project; orderBy before
-    // limit(1) so the chosen study row is partition-order independent
     val pc = patient.count()
-    discovery.put(study.orderBy("id").limit(1).select(
-      col("project_id"),
-      lit(pc).as("patient_count"),
-      col("description"),
-      col("identifier_coding")))
+    Store.putAll(Seq(
+      // full-fidelity store (the ES `fhir` index, :291-293)
+      fhirRaw -> typed.map { case (t, df) =>
+        df.select(col("project_id"), lit(t).as("resource_type"), col("id"),
+                  to_json(struct(df.columns.toIndexedSeq.map(col): _*))
+                    .as("resource_json"))
+      }.reduce(_ unionByName _),
+      // graph store (meta_upload, :224-226): one vertex per resource,
+      // edges from the child->patient references
+      vertices -> typed.map { case (t, df) =>
+        df.select(col("project_id"), col("id"), lit(t).as("label"))
+      }.reduce(_ unionByName _),
+      edges -> obs.select(col("project_id"), col("id").as("src"),
+                          col("patient_id").as("dst"), lit("observes").as("label"))
+        .unionByName(
+          docRef.select(col("project_id"), col("id").as("src"),
+                        col("patient_id").as("dst"), lit("documents").as("label"))),
+      flatPatient -> capped(SchemaFlattener.flatten(patient)
+        .join(obsStats, Seq("id"), "left")
+        .join(docStats, Seq("id"), "left")
+        .na.fill(0, Seq("observation_count", "file_count", "total_bytes"))),
+      flatObservation -> capped(SchemaFlattener.flatten(obs)),
+      flatFile -> capped(SchemaFlattener.flatten(docRef)),
+      // discovery summary (:261-289): one row per project; orderBy before
+      // limit(1) so the chosen study row is partition-order independent
+      discovery -> study.orderBy("id").limit(1).select(
+        col("project_id"),
+        lit(pc).as("patient_count"),
+        col("description"),
+        col("identifier_coding"))),
+      Seq(projectId))
   }
 
   /** Export one project's resources as NDJSON files under `outDir`

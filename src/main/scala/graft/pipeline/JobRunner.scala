@@ -5,6 +5,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import java.io.{File, FileOutputStream}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import org.apache.commons.io.FileUtils
 import scala.jdk.CollectionConverters._
 
 /** The reference's job entry point re-expressed over [[Etl]]: parse an
@@ -51,7 +52,7 @@ final class JobRunner(etl: Etl, clock: () => String =
         }
         // all commits of the push load as ONE cumulative import
         // (reference :455-470) — per-commit writes would overwrite;
-        // Etl.put validates every dir exists BEFORE wiping the project
+        // Etl.put validates that every dir exists before writing
         etl.put(spark, projectId, dirs, limit = None)
         val files = dirs.flatMap(d =>
           Option(new File(d).listFiles()).getOrElse(Array.empty)
@@ -113,25 +114,26 @@ final class JobRunner(etl: Etl, clock: () => String =
       logs += s"No read permissions on $projectId"
       return None
     }
-    val stage = Files.createTempDirectory("export").toString
-    etl.get(spark, projectId, stage)
-    val zipName = s"${projectId}_${clock()}_SNAPSHOT.zip"
-    val zipPath = Paths.get(exportDir, zipName)
-    Files.createDirectories(zipPath.getParent)
-    val zout = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
+    // the export holds the project's full NDJSON: drop it once zipped
+    val stage = Files.createTempDirectory("export")
+    val zipPath = Paths.get(exportDir, s"${projectId}_${clock()}_SNAPSHOT.zip")
     try {
-      Files.walk(Paths.get(stage)).iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-                     !p.getFileName.toString.startsWith("_") &&
-                     !p.getFileName.toString.endsWith(".crc"))
-        .toSeq.sortBy(_.toString)
-        .foreach { p =>
-          zout.putNextEntry(new ZipEntry(
-            Paths.get(stage).relativize(p).toString))
-          zout.write(Files.readAllBytes(p))
-          zout.closeEntry()
-        }
-    } finally zout.close()
+      etl.get(spark, projectId, stage.toString)
+      Files.createDirectories(zipPath.getParent)
+      val zout = new ZipOutputStream(new FileOutputStream(zipPath.toFile))
+      try {
+        Files.walk(stage).iterator().asScala
+          .filter(p => Files.isRegularFile(p) &&
+                       !p.getFileName.toString.startsWith("_") &&
+                       !p.getFileName.toString.endsWith(".crc"))
+          .toSeq.sortBy(_.toString)
+          .foreach { p =>
+            zout.putNextEntry(new ZipEntry(stage.relativize(p).toString))
+            zout.write(Files.readAllBytes(p))
+            zout.closeEntry()
+          }
+      } finally zout.close()
+    } finally FileUtils.deleteQuietly(stage.toFile)
     Files.writeString(Paths.get(zipPath.toString + ".meta.json"),
       """{"submitter":null,"metadata_version":"0.0.1","is_metadata":true,"is_snapshot":true}""")
     Some(zipPath.toString)

@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Project-partitioned parquet store — the engine's replacement for the
@@ -15,38 +17,56 @@ import org.apache.spark.sql.functions.{broadcast, col}
   *  - dynamic partition pruning for every per-project read (the reference's
   *    ES `match: project_id` filter becomes a directory prune, zero I/O for
   *    other projects);
-  *  - per-project delete/reload as an O(1) metadata partition overwrite —
-  *    no row-level rewrite (`partitionOverwriteMode=dynamic` replaces only
-  *    the partitions present in the written frame);
+  *  - one way to replace a project ([[Store.putAll]]): stage the write,
+  *    then swap each `project_id=…` directory in whole, so the live data
+  *    stays intact until the write has committed, and sub-partitions the
+  *    new write lacks go with the old directory;
   *  - idempotent re-import (the reference wipes and reloads a project per
-  *    commit, :451-470): overwriting the same partition twice converges.
+  *    commit, :451-470): replacing the same project twice converges.
   */
-final class Store(root: String, partitionCols: Seq[String] = Seq("project_id")) {
+final class Store(private val root: String,
+                  private val partitionCols: Seq[String] = Seq("project_id")) {
 
-  /** Append-or-overwrite the partitions present in `df` (put verb). Also
-    * persists the schema as a `_schema.ddl` sidecar (underscore-prefixed →
-    * invisible to Spark's file listing) so an empty table — the
-    * reference's "/dev/null" empty-load, which writes zero partition
-    * directories — still reads back as an empty-but-schema'd frame. */
-  def put(df: DataFrame): Unit = put(df, Map.empty)
+  /** Replace the projects present in `df` (put verb); `options` are extra
+    * parquet writer options (e.g. a small `parquet.block.size` in tests to
+    * force multiple row groups). Also persists the schema as a
+    * `_schema.ddl` sidecar (underscore-prefixed → invisible to Spark's file
+    * listing) so an empty table — the reference's "/dev/null" empty-load,
+    * which writes zero partition directories — still reads back as an
+    * empty-but-schema'd frame. */
+  def put(df: DataFrame, options: Map[String, String] = Map.empty): Unit =
+    Store.putAll(Seq(this -> df), Nil, options)
 
-  /** As [[put]], with extra parquet writer options (e.g. a small
-    * `parquet.block.size` in tests to force multiple row groups). */
-  def put(df: DataFrame, options: Map[String, String]): Unit = {
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .options(options)
-      .partitionBy(partitionCols: _*)
-      .parquet(root)
-    val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+  /** Swap a committed staged write in: each staged `project_id=…`
+    * directory and each of `projectIds` (dropped if nothing was staged)
+    * is moved aside, replaced, and its backup dropped. Every rename is
+    * checked (Hadoop reports most failures as a false return); a failed
+    * swap restores the backup, else leaves it (dot-prefixed, invisible to
+    * readers) for manual recovery. */
+  private def swapIn(df: DataFrame, staging: Path, projectIds: Seq[String]): Unit = {
+    val fs = fileSystem(df.sparkSession)
     val out = fs.create(schemaPath, true)
     try out.write(df.schema.toDDL.getBytes("UTF-8")) finally out.close()
+    val staged = fs.listStatus(staging).map(_.getPath.getName)
+      .filter(_.startsWith(s"${partitionCols.head}="))
+    (staged ++ projectIds.map(partitionDir)).distinct.foreach { name =>
+      val (live, next) = (new Path(path, name), new Path(staging, name))
+      val backup = new Path(path, s".${staging.getName}.$name")
+      if (fs.exists(live) && !fs.rename(live, backup))
+        throw new java.io.IOException(s"could not move $live aside")
+      if (fs.exists(next) && !fs.rename(next, live)) {
+        if (fs.exists(backup) && !fs.rename(backup, live))
+          throw new java.io.IOException(
+            s"swap AND restore failed for $live; old data kept at $backup")
+        throw new java.io.IOException(s"could not swap staged partition into $live")
+      }
+      fs.delete(backup, true)
+    }
   }
 
   /** Read the whole table; partition filters prune directories. */
   def read(spark: SparkSession): DataFrame = {
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark)
     if (fs.exists(schemaPath)) {
       val in = fs.open(schemaPath)
       val ddl = try new String(
@@ -59,8 +79,8 @@ final class Store(root: String, partitionCols: Seq[String] = Seq("project_id")) 
   /** Compact one project's partition to `nFiles` files — the maintenance
     * op that keeps long-lived stores healthy (every re-import/append
     * cycle leaves task-count-many files; small files dominate scan
-    * overhead at scale). Rewrite-in-place via dynamic overwrite of just
-    * this partition.
+    * overhead at scale). A [[put]] of just this partition: the rewrite
+    * reads the live files and writes a staged copy that replaces them.
     *
     * `clusterBy` additionally sorts rows within the rewritten files: a
     * sorted file gives every parquet row group (and page) a NARROW,
@@ -139,95 +159,75 @@ final class Store(root: String, partitionCols: Seq[String] = Seq("project_id")) 
     * plain parquet: rows of `updates` replace existing rows with the same
     * `key`; unmatched updates insert. Implemented as a partition rewrite:
     * anti-join the old partition against the (broadcastable) update keys,
-    * union, write to a STAGING root, then swap the partition directory
-    * in. Stage-then-swap matters twice over — the merged plan reads the
-    * very files the write replaces (overwriting in place would corrupt
-    * the input mid-scan), and the old partition stays intact until the
-    * staged write has fully committed. At scale the cost is one
-    * partition's rewrite, never a table scan, and nothing is ever
-    * collected to the driver. */
+    * union, and [[put]] — the merged plan reads the very files the put
+    * replaces, which is safe because the put stages before it swaps. At
+    * scale the cost is one partition's rewrite, never a table scan, and
+    * nothing is ever collected to the driver. */
   def upsertProject(spark: SparkSession, projectId: String,
                     updates: DataFrame, key: String): Unit = {
     val pcol = partitionCols.head
     // confine updates to the target partition BEFORE touching anything: a
     // stray row with another (or null) partition value would delete its
-    // key here and then be silently discarded with the staging dir
+    // key here and then land in (or replace) another project
     val stray = updates
       .filter(col(pcol).isNull || col(pcol) =!= projectId).limit(1).count()
     require(stray == 0,
       s"upsertProject($projectId): every update row must carry $pcol = $projectId")
-    val merged = readProject(spark, projectId)
+    put(readProject(spark, projectId)
       .join(broadcast(updates.select(col(key))), Seq(key), "left_anti")
-      .unionByName(updates)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = path.getFileSystem(conf)
-    // unique staging root: concurrent upserts (the per-project
-    // parallelism this store promises) must not share staging state
-    val tmpRoot = new org.apache.hadoop.fs.Path(
-      root + "_upsert_staging_" + java.util.UUID.randomUUID().toString)
-    merged.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(tmpRoot.toString)
-    def cleanup(): Unit = { fs.delete(tmpRoot, true); () }
-    // locate the staged partition by LISTING (Hive path-escapes special
-    // characters in partition values; recomputing the name would miss)
-    val staged = fs.listStatus(tmpRoot).map(_.getPath)
-      .filter(_.getName.startsWith(s"$pcol="))
-    if (staged.length != 1) {
-      cleanup()
-      throw new IllegalStateException(
-        s"expected exactly one staged $pcol partition, got " +
-        staged.map(_.getName).mkString("[", ", ", "]"))
-    }
-    val live = new org.apache.hadoop.fs.Path(path, staged.head.getName)
-    val backup = new org.apache.hadoop.fs.Path(
-      tmpRoot, "backup_" + staged.head.getName)
-    // backup-swap, checking EVERY rename (Hadoop reports most failures as
-    // a false return, not an exception): the old partition survives any
-    // failure, and a failed swap restores it. The staging root is only
-    // removed once the data is safe — in the swap-AND-restore-failed
-    // worst case it is deliberately LEFT for manual recovery.
-    if (fs.exists(live) && !fs.rename(live, backup)) {
-      cleanup()
-      throw new java.io.IOException(s"could not move $live aside")
-    }
-    if (!fs.rename(staged.head, live)) {
-      if (fs.exists(backup) && !fs.rename(backup, live))
-        throw new java.io.IOException(
-          s"swap AND restore failed for $live; old data kept at $backup")
-      cleanup()
-      throw new java.io.IOException(s"could not swap staged partition into $live")
-    }
-    cleanup()
+      .unionByName(updates))
   }
 
-  private def path = new org.apache.hadoop.fs.Path(root)
-  private def schemaPath = new org.apache.hadoop.fs.Path(root, "_schema.ddl")
+  private def path = new Path(root)
+  private def fileSystem(spark: SparkSession): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def schemaPath = new Path(root, "_schema.ddl")
+
+  /** One project's partition directory, escaped as Spark names it
+    * (`aced-brca:v2` → `project_id=aced-brca%3Av2`): an outside project id
+    * stays one path component, never a relative path out of the store. */
+  private def partitionDir(projectId: String): String =
+    ExternalCatalogUtils.getPartitionPathString(partitionCols.head, projectId)
 
   /** Whether this store has ever been written — reading a never-written
     * root throws (no files, no schema sidecar), so existence-sensitive
-    * callers (e.g. the delete verb's discovery guard) check first, like
-    * [[deleteProject]] does. */
+    * callers (e.g. the delete verb's discovery guard) check first. A
+    * failed first [[put]] leaves the store uninitialized. */
   def isInitialized(spark: SparkSession): Boolean =
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+    fileSystem(spark).exists(path)
 
   /** Read one project's partition (get verb) — a directory prune, not a
     * scan-and-filter. */
   def readProject(spark: SparkSession, projectId: String): DataFrame =
     read(spark).filter(col(partitionCols.head) === projectId)
 
-  /** Delete one project (delete verb): rewrite the table without the
-    * project's partitions. On plain parquet this is a partition drop via
-    * overwrite of nothing — implemented as an overwrite of the remaining
-    * partition list is wrong at scale, so instead we delete the partition
-    * directories directly (the parquet-table equivalent of the reference's
-    * per-project ES delete-by-query, fhir_import_export.py:375-376).
-    */
-  def deleteProject(spark: SparkSession, projectId: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(root)
-    val fs = base.getFileSystem(conf)
-    val dir = new org.apache.hadoop.fs.Path(
-      base, s"${partitionCols.head}=$projectId")
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
+  /** Delete one project (delete verb): drop its partition directory —
+    * the parquet-table equivalent of the reference's per-project ES
+    * delete-by-query (fhir_import_export.py:375-376). */
+  def deleteProject(spark: SparkSession, projectId: String): Unit =
+    fileSystem(spark).delete(new Path(path, partitionDir(projectId)), true)
+}
+
+object Store {
+
+  /** Write several stores as one unit: each frame is written with a plain
+    * overwrite to a unique staging root next to its store, and the
+    * projects are swapped in only after every write has committed, so a
+    * failed write leaves every store as it was. `projectIds` are replaced
+    * in every store, also where a frame has no rows for them. */
+  private[pipeline] def putAll(writes: Seq[(Store, DataFrame)],
+                               projectIds: Seq[String],
+                               options: Map[String, String] = Map.empty): Unit = {
+    val staged = writes.map { case (store, df) =>
+      (store, df, new Path(s"${store.root}_staging_${java.util.UUID.randomUUID()}"))
+    }
+    try {
+      staged.foreach { case (store, df, dir) =>
+        df.write.mode(SaveMode.Overwrite).options(options)
+          .partitionBy(store.partitionCols: _*).parquet(dir.toString)
+      }
+      staged.foreach { case (store, df, dir) => store.swapIn(df, dir, projectIds) }
+    } finally staged.foreach { case (store, df, dir) =>
+      store.fileSystem(df.sparkSession).delete(dir, true) }
   }
 }

@@ -138,6 +138,63 @@ class EtlSpec extends SparkSpec {
     assert(etl.flatObservation.readProject(spark, "aced-demo").count() === 1)
   }
 
+  private def stores(etl: Etl) =
+    Seq(etl.fhirRaw, etl.vertices, etl.edges, etl.flatPatient,
+        etl.flatObservation, etl.flatFile, etl.discovery)
+
+  test("a failed put leaves the previous import readable in every store") {
+    val root = Files.createTempDirectory("etl-fail")
+    val etl = new Etl(root.toString)
+    etl.put(spark, "aced-demo", commitDir())
+    def contents(): Seq[Seq[String]] = stores(etl).map(
+      _.readProject(spark, "aced-demo").toJSON.collect().sorted.toSeq)
+    val v1 = contents()
+    assert(v1.count(_.nonEmpty) === 6) // all but flat_file
+
+    // the Observation input fails only when a job reads it
+    val bad = Files.createTempDirectory("commit-bad")
+    Files.writeString(bad.resolve("Patient.ndjson"), patientLines)
+    Files.writeString(bad.resolve("ResearchStudy.ndjson"), studyLines)
+    Files.createDirectories(bad.resolve("Observation.ndjson"))
+    Files.write(bad.resolve("Observation.ndjson/part.json.gz"),
+      "not gzip".getBytes("UTF-8"))
+    intercept[Exception](etl.put(spark, "aced-demo", bad.toString))
+    assert(contents() === v1)
+    // no staging directory is left next to the stores
+    assert(root.toFile.list().toSet === Set("fhir_raw", "vertices", "edges",
+      "flat_patient", "flat_observation", "flat_file", "discovery"))
+
+    // a failed first put leaves a fresh root uninitialized
+    val fresh = Files.createTempDirectory("etl-fail-fresh")
+    val etl2 = new Etl(fresh.toString)
+    intercept[Exception](etl2.put(spark, "aced-demo", bad.toString))
+    assert(fresh.toFile.list().isEmpty, fresh.toFile.list().toSeq)
+    assert(!stores(etl2).exists(_.isInitialized(spark)))
+    assert(etl2.discoveryStudy(spark, "aced-demo") === None)
+  }
+
+  test("outside project ids stay inside their own partition directory") {
+    val etl = new Etl(Files.createTempDirectory("etl-ids").toString)
+    etl.put(spark, "aced-other", commitDir())
+    def other(): Seq[Long] =
+      stores(etl).map(_.readProject(spark, "aced-other").count())
+    val otherRows = other()
+    // unescaped, this id resolves to the edges store's root directory
+    etl.delete(spark, "a-../../../edges")
+    assert(other() === otherRows)
+    // Spark writes this id as project_id=aced-brca%3Av2
+    val escaped = "aced-brca:v2"
+    etl.put(spark, escaped, commitDir())
+    val noObs = Files.createTempDirectory("commit-noobs")
+    Files.writeString(noObs.resolve("Patient.ndjson"), patientLines)
+    etl.put(spark, escaped, noObs.toString)
+    assert(etl.flatObservation.readProject(spark, escaped).count() === 0)
+    assert(etl.flatPatient.readProject(spark, escaped).count() === 2)
+    etl.delete(spark, escaped)
+    assert(stores(etl).forall(_.readProject(spark, escaped).isEmpty))
+    assert(other() === otherRows)
+  }
+
   test("zip-of-ndjson source decompresses in executors") {
     val zdir = Files.createTempDirectory("zips")
     val zip = zdir.resolve("commit1.zip")

@@ -23,10 +23,17 @@ class JobRunnerSpec extends SparkSpec {
     dir
   }
 
+  /** Temp export directories the snapshot step creates. */
+  private def exportTemps(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).list()
+      .filter(_.startsWith("export")).toSet
+
   test("put envelope loads commits, auto-snapshots, reports files") {
-    val etl = new Etl(Files.createTempDirectory("jr").toString)
+    val root = Files.createTempDirectory("jr")
+    val etl = new Etl(root.toString)
     val runner = new JobRunner(etl, clock = () => "20260101-000000")
     val exp = Files.createTempDirectory("jr-exp").toString
+    val temps = exportTemps()
     val out = runner.run(spark,
       s"""{"method":"put","project_id":"aced-demo",
          |"push":{"commits":[{"commit_id":"c1","meta_path":"${commitDir()}"}]}}"""
@@ -43,6 +50,12 @@ class JobRunnerSpec extends SparkSpec {
     assert(Files.readString(Paths.get(snap + ".meta.json"))
       .contains("\"is_snapshot\":true"))
     assert(etl.flatPatient.readProject(spark, "aced-demo").count() === 1)
+    runner.run(spark, """{"method":"get","project_id":"aced-demo"}""", admin, exp)
+    // put + get leave no staging directory: not the exported NDJSON, not
+    // a staged store write
+    assert(exportTemps() -- temps === Set.empty)
+    assert(root.toFile.list().toSet === Set("fhir_raw", "vertices", "edges",
+      "flat_patient", "flat_observation", "flat_file", "discovery"))
   }
 
   test("get without read-storage soft-fails: null object_id + log, no throw") {

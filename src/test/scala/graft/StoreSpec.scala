@@ -30,8 +30,8 @@ class StoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("store-evolve").toString
     val store = new Store(root)
     store.put(sampleDf) // v1 schema: (project_id, resource_type, id)
-    // a later import ships an extra column; the dynamic overwrite only
-    // touches its own partition, and the schema sidecar advances to v2
+    // a later import ships an extra column; the put only replaces its own
+    // project, and the schema sidecar advances to v2
     // (newest-schema-wins), so v1 partitions read as NULL for the new
     // column instead of failing or being invisible
     val v2 = Seq(("aced-c", "Patient", "p9", "high"))
@@ -56,16 +56,19 @@ class StoreSpec extends SparkSpec {
     assert(store.read(spark).count() === 3)
   }
 
-  test("dynamic partition overwrite only touches written partitions") {
+  test("put replaces only the projects it writes, each one whole") {
     val root = Files.createTempDirectory("store-dyn").toString
-    val store = new Store(root)
-    store.put(sampleDf)
+    val store = new Store(root, Seq("project_id", "resource_type"))
     import spark.implicits._
-    // new commit for project a only, with different rows
+    store.put(sampleDf.unionByName(Seq(("aced-a", "Observation", "o1"))
+      .toDF("project_id", "resource_type", "id")))
+    // new commit for project a only, with different rows and no
+    // Observation: the old Observation sub-partition must go too
     store.put(Seq(("aced-a", "Patient", "p9")).toDF(
       "project_id", "resource_type", "id"))
     val all = store.read(spark)
-    assert(all.filter(col("project_id") === "aced-a").count() === 1)
+    assert(all.filter(col("project_id") === "aced-a")
+      .select("id").collect().map(_.getString(0)).toSeq === Seq("p9"))
     assert(all.filter(col("project_id") === "aced-b").count() === 1)
   }
 
@@ -148,9 +151,18 @@ class StoreSpec extends SparkSpec {
     import spark2.implicits._
     val root = Files.createTempDirectory("store-upsert").toString
     val store = new Store(root)
+    // every write stages next to the root and swaps in: nothing may stay
+    def residue(): Seq[String] = {
+      val rootFile = new java.io.File(root)
+      rootFile.getParentFile.list().toSeq
+        .filter(_.startsWith(rootFile.getName + "_"))
+    }
     store.put(Seq(
       ("aced-a", "k1", 1L), ("aced-a", "k2", 2L), ("aced-a", "k3", 3L),
       ("aced-b", "k1", 99L)).toDF("project_id", "id", "v"))
+    assert(residue().isEmpty)
+    store.compactProject(spark, "aced-a")
+    assert(residue().isEmpty)
     // k2 updated, k4 inserted; k1/k3 untouched; project b untouched
     store.upsertProject(spark, "aced-a",
       Seq(("aced-a", "k2", 20L), ("aced-a", "k4", 4L))
@@ -159,8 +171,7 @@ class StoreSpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("id") -> r.getAs[Long]("v")).toMap
     assert(a === Map("k1" -> 1L, "k2" -> 20L, "k3" -> 3L, "k4" -> 4L))
     assert(store.readProject(spark, "aced-b").count() === 1)
-    // no staging residue
-    assert(!new java.io.File(root + "_upsert_staging").exists())
+    assert(residue().isEmpty)
     // idempotent re-apply
     store.upsertProject(spark, "aced-a",
       Seq(("aced-a", "k2", 20L)).toDF("project_id", "id", "v"), key = "id")
