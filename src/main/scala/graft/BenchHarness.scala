@@ -13,24 +13,19 @@ package graft
   */
 object BenchHarness {
 
+  final case class PassResult(times: Seq[(String, Double)],
+                              errors: Map[String, String],
+                              checkpointSec: Map[String, Double])
+
   /** One timing pass over `names`. `run` must fully evaluate the query
     * (noop-sink write). Returns times for the queries that succeeded and
     * a message per query that threw. Per-query localCheckpoint wall time
     * (diffed from [[PlanUtil.checkpointStats]]) is recorded separately —
     * only for queries where it is non-zero — so a checkpoint-cost creep
     * in the iterative family is its own line in the artifact instead of
-    * hiding inside warm totals (VERDICT r7 #8). */
-  def pass(names: Seq[String], run: String => Unit, tag: String)
-      : (Seq[(String, Double)], Map[String, String]) =
-    passDetailed(names, run, tag) match {
-      case PassResult(times, errs, _) => (times, errs)
-    }
-
-  final case class PassResult(times: Seq[(String, Double)],
-                              errors: Map[String, String],
-                              checkpointSec: Map[String, Double])
-
-  /** `afterEach` runs between queries, OUTSIDE the timed window — the
+    * hiding inside warm totals (VERDICT r7 #8).
+    *
+    * `afterEach` runs between queries, OUTSIDE the timed window — the
     * round-9 drift fix hands `spark.catalog.clearCache()` here so a
     * query's leaked `.cache()` frames (cached inside a returned lazy
     * plan, where the query closure CANNOT unpersist them — evaluation

@@ -80,6 +80,11 @@ final class Etl(root: String,
 
     val typed = Seq("ResearchStudy" -> study, "Patient" -> patient,
                     "Observation" -> obs, "DocumentReference" -> docRef)
+    // each input is read once per put: the frames are persisted, the
+    // first staged write (fhir_raw reads all four) fills the cache, and
+    // the other six, discovery's patient count included, read it; the
+    // finally releases it, also when a write fails
+    typed.foreach(_._2.persist())
 
     // flat tables (load_flat x3, :230-258); patient denormalized with
     // related-resource aggregates (denormalize_patient, :229) —
@@ -89,38 +94,38 @@ final class Etl(root: String,
            avg(col("value_numeric")).as("avg_value"))
     val docStats = docRef.groupBy(col("patient_id").as("id"))
       .agg(count(lit(1)).as("file_count"), sum(col("content_size")).as("total_bytes"))
-    val pc = patient.count()
-    Store.putAll(Seq(
-      // full-fidelity store (the ES `fhir` index, :291-293)
-      fhirRaw -> typed.map { case (t, df) =>
-        df.select(col("project_id"), lit(t).as("resource_type"), col("id"),
-                  to_json(struct(df.columns.toIndexedSeq.map(col): _*))
-                    .as("resource_json"))
-      }.reduce(_ unionByName _),
-      // graph store (meta_upload, :224-226): one vertex per resource,
-      // edges from the child->patient references
-      vertices -> typed.map { case (t, df) =>
-        df.select(col("project_id"), col("id"), lit(t).as("label"))
-      }.reduce(_ unionByName _),
-      edges -> obs.select(col("project_id"), col("id").as("src"),
-                          col("patient_id").as("dst"), lit("observes").as("label"))
-        .unionByName(
-          docRef.select(col("project_id"), col("id").as("src"),
-                        col("patient_id").as("dst"), lit("documents").as("label"))),
-      flatPatient -> capped(SchemaFlattener.flatten(patient)
-        .join(obsStats, Seq("id"), "left")
-        .join(docStats, Seq("id"), "left")
-        .na.fill(0, Seq("observation_count", "file_count", "total_bytes"))),
-      flatObservation -> capped(SchemaFlattener.flatten(obs)),
-      flatFile -> capped(SchemaFlattener.flatten(docRef)),
-      // discovery summary (:261-289): one row per project; orderBy before
-      // limit(1) so the chosen study row is partition-order independent
-      discovery -> study.orderBy("id").limit(1).select(
-        col("project_id"),
-        lit(pc).as("patient_count"),
-        col("description"),
-        col("identifier_coding"))),
-      Seq(projectId))
+    try {
+      Store.putAll(Seq(
+        // full-fidelity store (the ES `fhir` index, :291-293)
+        fhirRaw -> typed.map { case (t, df) =>
+          df.select(col("project_id"), lit(t).as("resource_type"), col("id"),
+                    to_json(struct(df.columns.toIndexedSeq.map(col): _*))
+                      .as("resource_json"))
+        }.reduce(_ unionByName _),
+        // graph store (meta_upload, :224-226): one vertex per resource,
+        // edges from the child->patient references
+        vertices -> typed.map { case (t, df) =>
+          df.select(col("project_id"), col("id"), lit(t).as("label"))
+        }.reduce(_ unionByName _),
+        edges -> obs.select(col("project_id"), col("id").as("src"),
+                            col("patient_id").as("dst"), lit("observes").as("label"))
+          .unionByName(
+            docRef.select(col("project_id"), col("id").as("src"),
+                          col("patient_id").as("dst"), lit("documents").as("label"))),
+        flatPatient -> capped(SchemaFlattener.flatten(patient)
+          .join(obsStats, Seq("id"), "left")
+          .join(docStats, Seq("id"), "left")
+          .na.fill(0, Seq("observation_count", "file_count", "total_bytes"))),
+        flatObservation -> capped(SchemaFlattener.flatten(obs)),
+        flatFile -> capped(SchemaFlattener.flatten(docRef)),
+        // discovery summary (:261-289): one row per project; orderBy before
+        // limit(1) so the chosen study row is partition-order independent
+        discovery -> study.orderBy("id").limit(1)
+          .crossJoin(patient.agg(count(lit(1)).as("patient_count")))
+          .select(col("project_id"), col("patient_count"), col("description"),
+                  col("identifier_coding"))),
+        Seq(projectId))
+    } finally typed.foreach(_._2.unpersist())
   }
 
   /** Export one project's resources as NDJSON files under `outDir`

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, col}
+import scala.util.control.NonFatal
 
 /** Project-partitioned parquet store — the engine's replacement for the
   * reference's four stores (SURVEY.md §1.4, §2.12). The reference loads a
@@ -214,20 +215,29 @@ object Store {
     * overwrite to a unique staging root next to its store, and the
     * projects are swapped in only after every write has committed, so a
     * failed write leaves every store as it was. `projectIds` are replaced
-    * in every store, also where a frame has no rows for them. */
+    * in every store, also where a frame has no rows for them. The staging
+    * roots of a failed write are deleted only once its tasks have ended:
+    * a killed task that opens its output file late recreates its root. */
   private[pipeline] def putAll(writes: Seq[(Store, DataFrame)],
                                projectIds: Seq[String],
                                options: Map[String, String] = Map.empty): Unit = {
     val staged = writes.map { case (store, df) =>
       (store, df, new Path(s"${store.root}_staging_${java.util.UUID.randomUUID()}"))
     }
+    val watch = new JobWatch(writes.head._2.sparkSession.sparkContext)
     try {
-      staged.foreach { case (store, df, dir) =>
+      try watch.run(staged.foreach { case (store, df, dir) =>
         df.write.mode(SaveMode.Overwrite).options(options)
           .partitionBy(store.partitionCols: _*).parquet(dir.toString)
+      }) catch { case NonFatal(e) =>
+        try watch.awaitIdle() catch { case NonFatal(x) => e.addSuppressed(x) }
+        throw e
       }
       staged.foreach { case (store, df, dir) => store.swapIn(df, dir, projectIds) }
-    } finally staged.foreach { case (store, df, dir) =>
-      store.fileSystem(df.sparkSession).delete(dir, true) }
+    } finally {
+      watch.close()
+      staged.foreach { case (store, df, dir) =>
+        store.fileSystem(df.sparkSession).delete(dir, true) }
+    }
   }
 }

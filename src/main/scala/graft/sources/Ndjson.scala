@@ -28,9 +28,4 @@ object Ndjson {
     if (Files.exists(path)) spark.read.schema(schema).json(path.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
-
-  /** Schema-inferring read for exploratory/dynamic ingest (small inputs
-    * only — inference scans the data twice). */
-  def readInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
 }

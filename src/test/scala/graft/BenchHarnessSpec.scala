@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchHarnessSpec extends AnyFunSuite {
 
   test("a throwing query lands in errors, not in times") {
-    val (times, errs) = BenchHarness.pass(
+    val BenchHarness.PassResult(times, errs, _) = BenchHarness.passDetailed(
       Seq("ok", "boom", "ok2"),
       n => if (n == "boom") throw new IllegalStateException("synthetic OOM"),
       "spec")

@@ -1,9 +1,13 @@
 package graft
 
-import graft.pipeline.Etl
+import graft.operators.PlanDump
+import graft.pipeline.{Etl, JobWatch}
 import graft.sources.ZipNdjson
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** End-to-end reference lifecycle: put (import) → get (export) → delete,
   * including the missing-resource-file fallback and re-import idempotence
@@ -193,6 +197,39 @@ class EtlSpec extends SparkSpec {
     etl.delete(spark, escaped)
     assert(stores(etl).forall(_.readProject(spark, escaped).isEmpty))
     assert(other() === otherRows)
+  }
+
+  /** Rows each `<Type>.ndjson` file's scans produced while `body` ran,
+    * summed over every scan operator that executed (a cached frame's scan
+    * counts once, however many queries read the cache). */
+  private def ndjsonRowsScanned(body: => Unit): Map[String, Long] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    val watch = new JobWatch(spark.sparkContext)
+    try { body; watch.awaitIdle() }
+    finally { watch.close(); spark.listenerManager.unregister(listener) }
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
+    plans.asScala.flatMap(PlanDump.operators(_, executed = true))
+      .foreach { case s: FileSourceScanExec => scans.add(s); case _ => }
+    scans.asScala.toSeq.flatMap(s => s.relation.location.rootPaths.map(_.getName)
+        .filter(_.endsWith(".ndjson"))
+        .map(_.stripSuffix(".ndjson") -> s.metrics("numOutputRows").value))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  test("a put scans each resource file once") {
+    val etl = new Etl(Files.createTempDirectory("etl-once").toString)
+    val rows = ndjsonRowsScanned(etl.put(spark, "aced-demo", commitDir()))
+    // one pass over a file yields its line count
+    assert(rows === Map("Patient" -> 2L, "Observation" -> 2L,
+                        "ResearchStudy" -> 1L))
   }
 
   test("zip-of-ndjson source decompresses in executors") {

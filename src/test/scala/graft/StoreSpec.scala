@@ -187,6 +187,31 @@ class StoreSpec extends SparkSpec {
     assert(store.readProject(spark, "aced-b").count() === 1)
   }
 
+  test("a write that fails part-way leaves the store as it was and no staging root") {
+    val root = Files.createTempDirectory("store-fail")
+    val store = new Store(root.resolve("s").toString)
+    store.put(sampleDf)
+    def rows(): Seq[String] = store.read(spark).toJSON.collect().sorted.toSeq
+    val before = rows()
+    // one task fails at once while the others are still on their first
+    // row; a busy loop, unlike a sleep, outlives the kill, so those tasks
+    // open their output files after the failure has reached the driver
+    val late = udf { (i: Long) =>
+      if (i == 0) throw new IllegalStateException("bad row")
+      val end = System.nanoTime() + 300000000L
+      while (System.nanoTime() < end) {}
+      s"p$i"
+    }
+    val n = math.max(2, spark.sparkContext.defaultParallelism)
+    val failing = spark.range(0, n, 1, n).select(lit("aced-a").as("project_id"),
+      lit("Patient").as("resource_type"), late(col("id")).as("id"))
+    for (_ <- 1 to 3) {
+      intercept[Exception](store.put(failing))
+      assert(rows() === before)
+      assert(root.toFile.list().toSeq === Seq("s"))
+    }
+  }
+
   test("deleteProject drops exactly one project (empty_project semantics)") {
     val root = Files.createTempDirectory("store-del").toString
     val store = new Store(root)
