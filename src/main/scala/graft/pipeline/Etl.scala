@@ -2,7 +2,9 @@ package graft.pipeline
 
 import graft.plans.SchemaFlattener
 import graft.sources.Ndjson
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -65,8 +67,15 @@ final class Etl(root: String,
     require(commitDirs.nonEmpty, "at least one commit dir required")
     // a typo'd meta_path must fail the job, not load an empty project
     // (missing resource FILES inside an existing dir are still fine —
-    // that's the reference's "/dev/null" empty-load)
-    val missing = commitDirs.filterNot(d => new java.io.File(d).isDirectory)
+    // that's the reference's "/dev/null" empty-load); a dir is a Hadoop
+    // path, so a `file://` or cluster URI resolves like a plain path
+    val missing = commitDirs.filterNot { d =>
+      d.nonEmpty && {
+        val dir = new Path(d)
+        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.exists(dir) && fs.getFileStatus(dir).isDirectory
+      }
+    }
     require(missing.isEmpty,
       s"commit dir(s) not found: ${missing.mkString(", ")}")
     def readAll(name: String): DataFrame =
@@ -129,18 +138,32 @@ final class Etl(root: String,
   }
 
   /** Export one project's resources as NDJSON files under `outDir`
-    * (one file tree per resource type, like the reference's
-    * `studies/<project>` layout). */
+    * (one file tree `<Type>.ndjson` per resource type, like the
+    * reference's `studies/<project>` layout); returns the exported types,
+    * sorted. One write job partitioned by `resource_type` fills a fresh
+    * `_get_<uuid>` directory inside `outDir` (each fhir_raw file holds one
+    * type, so the writer's per-task sort on it never shuffles), then each
+    * `resource_type=<T>` directory replaces `<T>.ndjson`. Nothing else in
+    * `outDir` is touched. */
   def get(spark: SparkSession, projectId: String, outDir: String): Seq[String] = {
-    val part = fhirRaw.readProject(spark, projectId)
-    val types = part.select("resource_type").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    types.foreach { t =>
-      part.filter(col("resource_type") === t)
-        .select("resource_json")
-        .write.mode("overwrite").text(s"$outDir/$t.ndjson")
-    }
-    types
+    val tmp = new Path(outDir, s"_get_${java.util.UUID.randomUUID()}")
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = "resource_type="
+    try {
+      fhirRaw.readProject(spark, projectId)
+        .select("resource_type", "resource_json")
+        .write.partitionBy("resource_type").text(tmp.toString)
+      fs.listStatus(tmp).map(_.getPath.getName).filter(_.startsWith(prefix))
+        .map { name =>
+          val t = ExternalCatalogUtils.unescapePathName(name.stripPrefix(prefix))
+          val dest = new Path(outDir, s"$t.ndjson")
+          if (fs.exists(dest) && !fs.delete(dest, true))
+            throw new java.io.IOException(s"could not replace $dest")
+          if (!fs.rename(new Path(tmp, name), dest))
+            throw new java.io.IOException(s"could not move the export of $t to $dest")
+          t
+        }.sorted.toSeq
+    } finally fs.delete(tmp, true)
   }
 
   /** Drop one project from every store (idempotent). */

@@ -1,8 +1,9 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import java.io.{File, FileOutputStream}
+import java.io.FileOutputStream
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.commons.io.FileUtils
@@ -54,9 +55,11 @@ final class JobRunner(etl: Etl, clock: () => String =
         // (reference :455-470) — per-commit writes would overwrite;
         // Etl.put validates that every dir exists before writing
         etl.put(spark, projectId, dirs, limit = None)
-        val files = dirs.flatMap(d =>
-          Option(new File(d).listFiles()).getOrElse(Array.empty)
-            .map(_.getName).sorted.toSeq)
+        val files = dirs.flatMap { d =>
+          val dir = new Path(d)
+          dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .listStatus(dir).map(_.getPath.getName).sorted.toSeq
+        }
         // reference auto-snapshots after put (:421-423)
         val snap = snapshot(spark, projectId, program, project, user,
                             exportDir, logs)
@@ -103,7 +106,8 @@ final class JobRunner(etl: Etl, clock: () => String =
     * reference's `_get` (:322-325 returns None), so a put by a
     * create-only user still succeeds, just without the auto-snapshot. A
     * `.meta.json` sidecar carries the reference's upload metadata map
-    * (:351-352). */
+    * (:351-352). Each exported part file is streamed into the zip, never
+    * held whole in driver memory. */
   private def snapshot(spark: SparkSession, projectId: String,
                        program: String, project: String,
                        user: Authz.UserProfile, exportDir: String,
@@ -129,7 +133,7 @@ final class JobRunner(etl: Etl, clock: () => String =
           .toSeq.sortBy(_.toString)
           .foreach { p =>
             zout.putNextEntry(new ZipEntry(stage.relativize(p).toString))
-            zout.write(Files.readAllBytes(p))
+            Files.copy(p, zout)
             zout.closeEntry()
           }
       } finally zout.close()

@@ -5,9 +5,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
 
 /** Follows, from Spark's listener events, the jobs that [[run]] submits
-  * and their tasks, until [[close]]. A failed job's killed tasks can still
-  * be running when the failure reaches the driver, so cleanup after a
-  * failed write waits for them with [[awaitIdle]] first. */
+  * (from any thread) and their tasks, until [[close]]. A failed job's
+  * killed tasks can still be running when the failure reaches the driver,
+  * so cleanup after a failed write waits for them with [[awaitIdle]]
+  * first. [[cancel]] stops the tagged jobs, also those started later. */
 private[graft] final class JobWatch(sc: SparkContext) extends SparkListener {
   private val tag = java.util.UUID.randomUUID().toString
   private val barrierTag = s"$tag/barrier"
@@ -16,10 +17,19 @@ private[graft] final class JobWatch(sc: SparkContext) extends SparkListener {
   private var running = 0
   private var barrier = -1
   private var barrierEnded = false
+  private var cancelled = false
   sc.addSparkListener(this)
 
-  /** Runs `body` with the jobs it submits tagged as this watch's. */
+  /** Runs `body` with the jobs it submits tagged as this watch's. Local
+    * properties are per thread: call it on the thread that submits. */
   def run[T](body: => T): T = tagged(tag)(body)
+
+  /** Cancels every tagged job that has started, and each one that starts
+    * from now on as soon as its start is seen. */
+  def cancel(): Unit = synchronized {
+    cancelled = true
+    jobs.foreach(sc.cancelJob)
+  }
 
   /** Returns once every tagged job and task started so far has ended, and
     * every listener event posted before the call has been delivered: a
@@ -48,7 +58,9 @@ private[graft] final class JobWatch(sc: SparkContext) extends SparkListener {
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     Option(e.properties).map(_.getProperty(JobWatch.Key)).foreach {
-      case `tag` => jobs += e.jobId; stages ++= e.stageIds
+      case `tag` =>
+        jobs += e.jobId; stages ++= e.stageIds
+        if (cancelled) sc.cancelJob(e.jobId)
       case `barrierTag` => barrier = e.jobId
       case _ =>
     }

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException,
+  ExecutorCompletionService, Executors, TimeUnit}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -215,29 +217,57 @@ object Store {
     * overwrite to a unique staging root next to its store, and the
     * projects are swapped in only after every write has committed, so a
     * failed write leaves every store as it was. `projectIds` are replaced
-    * in every store, also where a frame has no rows for them. The staging
-    * roots of a failed write are deleted only once its tasks have ended:
-    * a killed task that opens its output file late recreates its root. */
-  private[pipeline] def putAll(writes: Seq[(Store, DataFrame)],
-                               projectIds: Seq[String],
-                               options: Map[String, String] = Map.empty): Unit = {
+    * in every store, also where a frame has no rows for them.
+    *
+    * The writes are independent jobs and run concurrently, each on its own
+    * thread of a pool that lives for this call (one thread per write, at
+    * most [[MaxWriters]]): under FIFO scheduling they share the cluster's
+    * slots, and a later write's tasks fill the slots an earlier write's
+    * last stage leaves idle. Every write is joined before the outcome is
+    * acted on. The first failure cancels the other writes; the staging
+    * roots are deleted only once every tagged task has ended (a killed
+    * task that opens its output file late recreates its root), and the
+    * first failure is thrown with the others suppressed. */
+  private[graft] def putAll(writes: Seq[(Store, DataFrame)],
+                            projectIds: Seq[String],
+                            options: Map[String, String] = Map.empty): Unit = {
     val staged = writes.map { case (store, df) =>
       (store, df, new Path(s"${store.root}_staging_${java.util.UUID.randomUUID()}"))
     }
     val watch = new JobWatch(writes.head._2.sparkSession.sparkContext)
+    val pool = Executors.newFixedThreadPool(math.min(staged.size, MaxWriters),
+      { (r: Runnable) =>
+        val t = new Thread(r, "graft-putAll"); t.setDaemon(true); t })
     try {
-      try watch.run(staged.foreach { case (store, df, dir) =>
-        df.write.mode(SaveMode.Overwrite).options(options)
-          .partitionBy(store.partitionCols: _*).parquet(dir.toString)
-      }) catch { case NonFatal(e) =>
-        try watch.awaitIdle() catch { case NonFatal(x) => e.addSuppressed(x) }
-        throw e
+      val done = new ExecutorCompletionService[Unit](pool)
+      staged.foreach { case (store, df, dir) =>
+        done.submit(new Callable[Unit] {
+          def call(): Unit = watch.run {
+            df.write.mode(SaveMode.Overwrite).options(options)
+              .partitionBy(store.partitionCols: _*).parquet(dir.toString)
+          }
+        })
+      }
+      val failures = staged.flatMap { _ =>
+        try { done.take().get(); None }
+        catch { case e: ExecutionException => watch.cancel(); Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        try watch.awaitIdle() catch { case NonFatal(x) => first.addSuppressed(x) }
+        throw first
       }
       staged.foreach { case (store, df, dir) => store.swapIn(df, dir, projectIds) }
     } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
       watch.close()
       staged.foreach { case (store, df, dir) =>
         store.fileSystem(df.sparkSession).delete(dir, true) }
     }
   }
+
+  /** Most concurrent writes of one [[putAll]]: the seven stores of an
+    * import. */
+  private val MaxWriters = 7
 }

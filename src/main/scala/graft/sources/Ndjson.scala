@@ -1,8 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Paths}
 
 /** NDJSON (one JSON document per line) sources — the reference's input
   * format (etl-job/fhir_import_export.py:210-213: one `<Type>.ndjson` per
@@ -21,11 +21,13 @@ import java.nio.file.{Files, Paths}
 object Ndjson {
 
   /** Read `dir/<name>.ndjson` with the given schema; empty DataFrame with
-    * the same schema when the file is absent. */
+    * the same schema when the file is absent. `dir` is a Hadoop path (a
+    * plain path or a URI such as `file:///…`). */
   def readOrEmpty(spark: SparkSession, dir: String, name: String,
                   schema: StructType): DataFrame = {
-    val path = Paths.get(dir, s"$name.ndjson")
-    if (Files.exists(path)) spark.read.schema(schema).json(path.toString)
+    val path = new Path(dir, s"$name.ndjson")
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      spark.read.schema(schema).json(path.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

@@ -5,7 +5,10 @@ import graft.pipeline.{Etl, JobWatch}
 import graft.sources.ZipNdjson
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  SQLExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
@@ -140,6 +143,79 @@ class EtlSpec extends SparkSpec {
     etl.put(spark, "aced-demo", Seq(d3), limit = Some(1))
     assert(etl.flatPatient.readProject(spark, "aced-demo").count() === 1)
     assert(etl.flatObservation.readProject(spark, "aced-demo").count() === 1)
+  }
+
+  test("get writes one <Type>.ndjson per type into outDir and touches nothing else") {
+    val etl = new Etl(Files.createTempDirectory("etl-get").toString)
+    etl.put(spark, "aced-demo", commitDir())
+    val out = Files.createTempDirectory("get-layout")
+    Files.writeString(out.resolve("keep.txt"), "mine")
+    def ids(t: String): Seq[String] = spark.read.json(s"$out/$t.ndjson")
+      .select("id").collect().map(_.getString(0)).sorted.toSeq
+    val exported = Set("keep.txt", "Observation.ndjson", "Patient.ndjson",
+                       "ResearchStudy.ndjson")
+    assert(etl.get(spark, "aced-demo", out.toString) ===
+      Seq("Observation", "Patient", "ResearchStudy"))
+    assert(out.toFile.list().toSet === exported)
+    assert(ids("Patient") === Seq("p1", "p2"))
+
+    // a second get replaces each type's export whole
+    val d2 = Files.createTempDirectory("commit-next")
+    Files.writeString(d2.resolve("Patient.ndjson"),
+      """{"id":"p3","gender":"male","birthDate":"1970-01-01","identifier":[]}""" + "\n")
+    Files.writeString(d2.resolve("Observation.ndjson"),
+      """{"id":"o3","patient_id":"p3","code":"hr","value_numeric":70.0}""" + "\n")
+    Files.writeString(d2.resolve("ResearchStudy.ndjson"),
+      """{"id":"s2","status":"active","description":"next","identifier_coding":[]}""" + "\n")
+    etl.put(spark, "aced-demo", d2.toString)
+    assert(etl.get(spark, "aced-demo", out.toString) ===
+      Seq("Observation", "Patient", "ResearchStudy"))
+    assert(out.toFile.list().toSet === exported)
+    assert(Seq("Observation", "Patient", "ResearchStudy").map(ids) ===
+      Seq(Seq("o3"), Seq("p3"), Seq("s2")))
+    assert(Files.readString(out.resolve("keep.txt")) === "mine")
+
+    assert(etl.get(spark, "aced-unknown", out.toString) === Nil)
+    assert(out.toFile.list().toSet === exported)
+  }
+
+  test("a commit dir given as a file:// URI imports like its plain path") {
+    val dir = commitDir()
+    def counts(commit: String): Seq[Long] = {
+      val etl = new Etl(Files.createTempDirectory("etl-uri").toString)
+      etl.put(spark, "aced-demo", commit)
+      stores(etl).map(_.readProject(spark, "aced-demo").count())
+    }
+    val plain = counts(dir)
+    assert(plain === Seq(5L, 5L, 2L, 2L, 2L, 0L, 1L))
+    assert(counts(s"file://$dir") === plain)
+  }
+
+  test("a put runs its staged store writes as concurrent jobs") {
+    val etl = new Etl(Files.createTempDirectory("etl-concurrent").toString)
+    // each store write is one SQL execution: jobs of two executions
+    // running at once are two writes in flight together
+    val running = scala.collection.mutable.Map.empty[Int, String]
+    var mostAtOnce = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = running.synchronized {
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).foreach { id =>
+          running(e.jobId) = id
+          mostAtOnce = math.max(mostAtOnce, running.values.toSet.size)
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        running.synchronized(running -= e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val watch = new JobWatch(spark.sparkContext)
+    try { etl.put(spark, "aced-demo", commitDir()); watch.awaitIdle() }
+    finally { watch.close(); spark.sparkContext.removeSparkListener(listener) }
+    assert(running.synchronized(mostAtOnce) >= 2,
+      "the staged writes ran one after another")
+    // the writers' pool is gone with the call
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-putAll"))
   }
 
   private def stores(etl: Etl) =

@@ -2,6 +2,7 @@ package graft
 
 import graft.pipeline.Store
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class StoreSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
@@ -209,6 +210,42 @@ class StoreSpec extends SparkSpec {
       intercept[Exception](store.put(failing))
       assert(rows() === before)
       assert(root.toFile.list().toSeq === Seq("s"))
+    }
+  }
+
+  test("a failed write among concurrent ones keeps every store and throws its own error") {
+    val root = Files.createTempDirectory("store-fail-two")
+    val (slow, failing) =
+      (new Store(root.resolve("slow").toString), new Store(root.resolve("failing").toString))
+    slow.put(sampleDf)
+    failing.put(sampleDf)
+    def rows(): Seq[Seq[String]] =
+      Seq(slow, failing).map(_.read(spark).toJSON.collect().sorted.toSeq)
+    val before = rows()
+    // the failing write throws on its only row; the slow write's tasks
+    // busy-wait past the cancel and then open their output files
+    val bad = udf { (i: Long) =>
+      if (i >= 0) throw new IllegalStateException("bad row")
+      s"p$i"
+    }
+    val late = udf { (i: Long) =>
+      val end = System.nanoTime() + 300000000L
+      while (System.nanoTime() < end) {}
+      s"p$i"
+    }
+    def frame(n: Int, id: org.apache.spark.sql.Column) =
+      spark.range(0, n, 1, n).select(lit("aced-a").as("project_id"),
+        lit("Patient").as("resource_type"), id.as("id"))
+    val n = math.max(2, spark.sparkContext.defaultParallelism)
+    for (_ <- 1 to 3) {
+      val e = intercept[Exception](Store.putAll(Seq(
+        failing -> frame(1, bad(col("id"))), slow -> frame(n, late(col("id")))),
+        Seq("aced-a")))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("bad row")), e)
+      assert(rows() === before)
+      assert(root.toFile.list().toSet === Set("slow", "failing"))
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "graft-putAll"))
     }
   }
 
