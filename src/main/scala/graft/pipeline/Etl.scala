@@ -5,6 +5,7 @@ import graft.sources.Ndjson
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -89,10 +90,11 @@ final class Etl(root: String,
 
     val typed = Seq("ResearchStudy" -> study, "Patient" -> patient,
                     "Observation" -> obs, "DocumentReference" -> docRef)
-    // each input is read once per put: the frames are persisted, the
-    // first staged write (fhir_raw reads all four) fills the cache, and
-    // the other six, discovery's patient count included, read it; the
-    // finally releases it, also when a write fails
+    // each input is read once per put: the frames are persisted and one
+    // job fills all four caches before the writes start (a write that
+    // meets an unfilled cache submits its own job to fill it, one per
+    // input and write); the seven writes read them and the finally
+    // releases them, also when a job fails
     typed.foreach(_._2.persist())
 
     // flat tables (load_flat x3, :230-258); patient denormalized with
@@ -104,6 +106,9 @@ final class Etl(root: String,
     val docStats = docRef.groupBy(col("patient_id").as("id"))
       .agg(count(lit(1)).as("file_count"), sum(col("content_size")).as("total_bytes"))
     try {
+      spark.sparkContext.union(typed.flatMap(_._2.queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers }))
+        .count()
       Store.putAll(Seq(
         // full-fidelity store (the ES `fhir` index, :291-293)
         fhirRaw -> typed.map { case (t, df) =>

@@ -1,10 +1,12 @@
 package graft
 
 import graft.operators.PlanDump
+import graft.ops.LocalFs
 import graft.pipeline.{Etl, JobWatch}
 import graft.sources.ZipNdjson
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
@@ -306,6 +308,37 @@ class EtlSpec extends SparkSpec {
     // one pass over a file yields its line count
     assert(rows === Map("Patient" -> 2L, "Observation" -> 2L,
                         "ResearchStudy" -> 1L))
+  }
+
+  test("a warm put fills its four cached inputs in one job before the writes") {
+    val dir = commitDir()
+    Files.writeString(Paths.get(dir, "DocumentReference.ndjson"),
+      """{"id":"d1","patient_id":"p1","content_url":"s3://b/k","content_size":10}""" + "\n")
+    val etl = new Etl(Files.createTempDirectory("etl-jobs").toString)
+    etl.put(spark, "aced-demo", dir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val watch = new JobWatch(spark.sparkContext)
+    try { etl.put(spark, "aced-demo", dir); watch.awaitIdle() }
+    finally { watch.close(); spark.sparkContext.removeSparkListener(listener) }
+    // the fill job and the seven writes' 13 jobs; no write submits a
+    // cache-stage job of its own (18 jobs when they did); awaitIdle's
+    // barrier is one more
+    assert(jobs.get === 14 + 1)
+  }
+
+  test("a put and a get set every permission in-process") {
+    val root = Files.createTempDirectory("etl-chmod").toString
+    val etl = new Etl(root)
+    assert(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .isInstanceOf[LocalFs])
+    val before = LocalFs.fallbacks.sum
+    etl.put(spark, "aced-demo", commitDir())
+    etl.get(spark, "aced-demo", Files.createTempDirectory("etl-chmod-out").toString)
+    assert(LocalFs.fallbacks.sum === before)
   }
 
   test("zip-of-ndjson source decompresses in executors") {
