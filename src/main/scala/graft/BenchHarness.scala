@@ -1,15 +1,18 @@
 package graft
 
-/** Shared pass-runner for [[Bench]] and [[tools.Soak]].
+/** [[Bench]]'s pass-runner and JVM counters. A subset of the catalog is
+  * timed through `Bench` itself (`SPARK_GRAFT_BENCH_QUERIES`), at any sf
+  * dir (`SPARK_GRAFT_SF_DIR`), into any file (`SPARK_GRAFT_BENCH_OUT`).
   *
-  * Round-6 post-mortem: both tools caught per-query exceptions and printed
-  * them to stderr only, so a query that OOM'd or threw appeared in the JSON
-  * artifact as a missing (or implausibly fast) entry under `rc=0` — an
-  * sf10 soak at the default 8 GB heap silently lost queries mid-round and
-  * cost a debugging cycle. The contract now: a failed query gets NO time
-  * entry (never a bogus fast one), DOES get an entry in the `errors` map
-  * that is embedded in the JSON artifact, and the tool exits non-zero when
-  * any query failed — so a truncated artifact can no longer look complete.
+  * Round-6 post-mortem: the bench and soak tools caught per-query
+  * exceptions and printed them to stderr only, so a query that OOM'd or
+  * threw appeared in the JSON artifact as a missing (or implausibly fast)
+  * entry under `rc=0` — an sf10 soak at the default 8 GB heap silently
+  * lost queries mid-round and cost a debugging cycle. The contract now: a
+  * failed query gets NO time entry (never a bogus fast one), DOES get an
+  * entry in the `errors` map that is embedded in the JSON artifact, and
+  * the run exits non-zero when any query failed — so a truncated artifact
+  * can no longer look complete.
   */
 object BenchHarness {
 

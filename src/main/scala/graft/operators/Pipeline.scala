@@ -1234,9 +1234,16 @@ object Pipeline {
   private[graft] def jaccardTop30(s: SparkSession, d: String,
                                   pExpr: org.apache.spark.sql.Column,
                                   cap: Int): DataFrame = {
+    // the pair key packed below is injective only for 0 <= s < 2^31:
+    // checked lazily, once per supplier, inside the `parts` value every
+    // consumer reads, so column pruning cannot drop it. As a filter on `s`
+    // the optimizer would push it below the aggregate and infer it again
+    // on the pair stream through the degree joins.
     val sets = Tables.lineitem(s, d)
       .groupBy(col("l_suppkey").as("s"))
       .agg(collect_set(pExpr).as("parts"))
+      .withColumn("parts", when(col("s").between(0, Int.MaxValue), col("parts"))
+        .otherwise(raise_error(lit(SupplierKeyDomain))))
     val adj = sets.select(col("s"), explode(col("parts")).as("p"))
     val deg = sets.select(col("s"), size(col("parts")).as("dg"))
     val posting = adj
@@ -1249,9 +1256,10 @@ object Pipeline {
         Bridge.expression(col("sups"))))
     }
     // r12 (guide §2.3 "narrower types"): the ~9M-row pair stream packs
-    // (s_a, s_b) into ONE long key (supplier keys are positive ints, so
-    // s_a·2^32 + s_b is injective) — the aggregate hashes/compares one
-    // 8-byte key instead of two and the exchange drops 8 bytes/row;
+    // (s_a, s_b) into ONE long key (supplier keys are asserted above to
+    // be non-negative ints, so s_a·2^32 + s_b is injective) — the
+    // aggregate hashes/compares one 8-byte key instead of two and the
+    // exchange drops 8 bytes/row;
     // probed 2.7 → 2.4 s on the pair aggregate alone. Unpacked with
     // exact integral div/pmod right after the aggregate.
     posting.select(pairGen.as(Seq("s_a", "s_b")))
@@ -1270,6 +1278,9 @@ object Pipeline {
           (col("da") + col("db") - col("inter"))).as("jaccard"))
       .orderBy(desc("jaccard"), asc("s_a"), asc("s_b")).limit(30)
   }
+
+  private[graft] val SupplierKeyDomain =
+    "graph_jaccard packs two supplier keys into one long: each must lie in [0, 2^31)"
 
   val graphJaccard: Q = Q(
     "graph_jaccard",

@@ -212,7 +212,7 @@ class EtlSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     val watch = new JobWatch(spark.sparkContext)
-    try { etl.put(spark, "aced-demo", commitDir()); watch.awaitIdle() }
+    try { etl.put(spark, "aced-demo", commitDir()); assert(watch.awaitIdle()) }
     finally { watch.close(); spark.sparkContext.removeSparkListener(listener) }
     assert(running.synchronized(mostAtOnce) >= 2,
       "the staged writes ran one after another")
@@ -290,7 +290,7 @@ class EtlSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     val watch = new JobWatch(spark.sparkContext)
-    try { body; watch.awaitIdle() }
+    try { body; assert(watch.awaitIdle()) }
     finally { watch.close(); spark.listenerManager.unregister(listener) }
     val scans = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
@@ -316,18 +316,13 @@ class EtlSpec extends SparkSpec {
       """{"id":"d1","patient_id":"p1","content_url":"s3://b/k","content_size":10}""" + "\n")
     val etl = new Etl(Files.createTempDirectory("etl-jobs").toString)
     etl.put(spark, "aced-demo", dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    // an outer watch sees the jobs of the put's own inner one
+    val (_, put) = JobWatch.measure(spark.sparkContext) {
+      etl.put(spark, "aced-demo", dir)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val watch = new JobWatch(spark.sparkContext)
-    try { etl.put(spark, "aced-demo", dir); watch.awaitIdle() }
-    finally { watch.close(); spark.sparkContext.removeSparkListener(listener) }
     // the fill job and the seven writes' 13 jobs; no write submits a
-    // cache-stage job of its own (18 jobs when they did); awaitIdle's
-    // barrier is one more
-    assert(jobs.get === 14 + 1)
+    // cache-stage job of its own (18 jobs when they did)
+    assert(put.jobs === 14)
   }
 
   test("a put and a get set every permission in-process") {

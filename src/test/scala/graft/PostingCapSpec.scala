@@ -52,4 +52,17 @@ class PostingCapSpec extends SparkSpec {
       assert(inter >= 2 && j > 0.0 && j <= 1.0, s"malformed row $r")
     }
   }
+
+  test("graph_jaccard fails on a supplier key its packed pair key cannot hold") {
+    val li = Tables.lineitem(spark, sf0001)
+    val first = li.agg(min("l_suppkey")).first().getLong(0)
+    Seq(1L << 31, -1L).foreach { bad =>
+      val dir = java.nio.file.Files.createTempDirectory("jaccard-keys").toString
+      li.withColumn("l_suppkey",
+          when(col("l_suppkey") === first, bad).otherwise(col("l_suppkey")))
+        .write.parquet(s"$dir/lineitem.parquet")
+      val e = intercept[Exception](Pipeline.graphJaccard.fn(spark, dir).collect())
+      assert(e.getMessage.contains(Pipeline.SupplierKeyDomain), e.getMessage)
+    }
+  }
 }

@@ -1,20 +1,22 @@
 package graft
 
-import graft.ops.TaskMetrics
+import graft.pipeline.JobWatch
 import org.apache.spark.sql.functions._
 
 class TaskMetricsSpec extends SparkSpec {
+
+  private def measure[A](body: => A) = JobWatch.measure(spark.sparkContext)(body)
 
   private def runNoop(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   test("a groupBy measurably shuffles; a narrow projection does not") {
-    val (_, agg) = TaskMetrics.measure(spark) {
+    val (_, agg) = measure {
       runNoop(Tables.lineitem(spark, sf0001)
         .groupBy("l_suppkey").agg(sum("l_quantity")))
     }
     assert(agg.shuffleWriteBytes > 0, s"groupBy should shuffle: $agg")
-    val (_, proj) = TaskMetrics.measure(spark) {
+    val (_, proj) = measure {
       runNoop(Tables.lineitem(spark, sf0001)
         .select(col("l_orderkey"), col("l_quantity") * 2))
     }
@@ -60,10 +62,10 @@ class TaskMetricsSpec extends SparkSpec {
                 col("p.cosine").as("cosine"))
     }
     val w = Window.partitionBy("vec_id").orderBy(desc("cosine"), asc("nn_id"))
-    val (_, fused) = TaskMetrics.measure(spark) {
+    val (_, fused) = measure {
       runNoop(graft.operators.Vectors.knnJoinLsh.fn(spark, sf0001))
     }
-    val (_, naive) = TaskMetrics.measure(spark) {
+    val (_, naive) = measure {
       runNoop(cand.dropDuplicates("vec_id", "nn_id")
         .withColumn("nn_rank", row_number().over(w))
         .filter(col("nn_rank") <= 3)
@@ -82,12 +84,12 @@ class TaskMetricsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (_, good) = TaskMetrics.measure(spark) {
+      val (_, good) = measure {
         val stats = o.groupBy(col("o_custkey").as("c_custkey"))
           .agg(count(lit(1)).as("n"), sum("o_totalprice").as("s"))
         runNoop(c.join(stats, Seq("c_custkey"), "left"))
       }
-      val (_, naive) = TaskMetrics.measure(spark) {
+      val (_, naive) = measure {
         runNoop(c.join(o, c("c_custkey") === o("o_custkey"), "left")
           .groupBy("c_custkey")
           .agg(count(col("o_orderkey")).as("n"), sum("o_totalprice").as("s")))
@@ -105,12 +107,20 @@ class TaskMetricsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (_, m) = TaskMetrics.measure(spark) {
+      val (_, m) = measure {
         runNoop(spark.table("orders_m").join(spark.table("customer_m"),
           col("o_custkey") === col("c_custkey")))
       }
       assert(m.shuffleWriteBytes === 0 && m.shuffleReadBytes === 0,
         s"bucketed join shuffled: $m")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("an inner watch's jobs count for the outer one, its barrier does not") {
+    val ((_, inner), outer) = measure {
+      measure(runNoop(Tables.lineitem(spark, sf0001).groupBy("l_suppkey").count()))
+    }
+    assert(inner.jobs > 0 && inner.shuffleWriteBytes > 0, s"$inner")
+    assert(outer === inner)
   }
 }

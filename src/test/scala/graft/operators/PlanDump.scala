@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
   RangePartitioning, RoundRobinPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
-  SortExec, SparkPlan, TakeOrderedAndProjectExec}
+  GlobalLimitExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
@@ -25,8 +25,9 @@ import scala.jdk.CollectionConverters._
   * (sorted by name) with the counts of the operators that decide cost at
   * scale in its pre-execution physical plan — exchanges by partitioning,
   * joins by strategy, file scans (and those with pushed filters), sorts,
-  * windows, top-k, generators and aggregates by kind. Partition counts stay
-  * out, so the record does not depend on the core count.
+  * windows (and those with no partition key), top-k, generators and
+  * aggregates by kind. Partition counts stay out, so the record does not
+  * depend on the core count.
   *
   * `sbt "Test/runMain graft.operators.PlanDump"` rewrites the file;
   * `PlanShapeSpec` rebuilds every plan through the same [[shape]] and fails
@@ -47,17 +48,37 @@ object PlanDump {
     "join.broadcast_hash", "join.sort_merge", "join.shuffled_hash",
     "join.broadcast_nested_loop", "join.cartesian",
     "scan.file", "scan.pushed_filters",
-    "sort", "window", "window_group_limit", "take_ordered", "generate",
+    "sort", "window", "window.unpartitioned", "window_group_limit",
+    "take_ordered", "generate",
     "agg.hash", "agg.object_hash", "agg.sort")
 
-  /** The shape of `q` built on a clean cache: a `cache()` another query
-    * left behind would otherwise substitute an InMemoryRelation into it.
-    * Absent fields read 0. */
-  def shape(spark: SparkSession, sfDir: String)(q: Q): Shape = {
+  /** The pre-execution physical plan of `q` built on a clean cache: a
+    * `cache()` another query left behind would otherwise substitute an
+    * InMemoryRelation into it. */
+  def plan(spark: SparkSession, sfDir: String)(q: Q): SparkPlan = {
     spark.catalog.clearCache()
-    operators(q.fn(spark, sfDir).queryExecution.executedPlan)
-      .flatMap(fields).groupMapReduce(identity)(_ => 1)(_ + _)
+    q.fn(spark, sfDir).queryExecution.executedPlan
+  }
+
+  /** The shape of a plan; absent fields read 0. */
+  def shape(plan: SparkPlan): Shape =
+    operators(plan).flatMap(fields).groupMapReduce(identity)(_ => 1)(_ + _)
       .withDefaultValue(0)
+
+  /** The unpartitioned windows of a plan with neither an aggregate nor a
+    * limit beneath them. Such a window sorts its whole input in one task,
+    * so that input must be bounded by something other than the data. */
+  def unboundedWindows(plan: SparkPlan): Seq[WindowExec] =
+    operators(plan).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty &&
+          !w.children.flatMap(operators(_)).exists(bounds) => w
+    }
+
+  private def bounds(p: SparkPlan): Boolean = p match {
+    case _: HashAggregateExec | _: ObjectHashAggregateExec |
+         _: SortAggregateExec | _: GlobalLimitExec |
+         _: TakeOrderedAndProjectExec => true
+    case _ => false
   }
 
   /** Every operator of the plan before it runs or, with `executed`, as it
@@ -98,7 +119,9 @@ object PlanDump {
         Seq("scan.file", "scan.pushed_filters")
       else Seq("scan.file")
     case _: SortExec => Seq("sort")
-    case _: WindowExec => Seq("window")
+    case w: WindowExec =>
+      if (w.partitionSpec.isEmpty) Seq("window", "window.unpartitioned")
+      else Seq("window")
     case _: WindowGroupLimitExec => Seq("window_group_limit")
     case _: TakeOrderedAndProjectExec => Seq("take_ordered")
     case _: GenerateExec => Seq("generate")
@@ -128,7 +151,7 @@ object PlanDump {
     // PlanShapeSpec rebuilds
     val fixture = new SparkSpec {}
     val lines = SparkEntry.catalog.sortBy(_.name).map { q =>
-      line(q.name, shape(fixture.spark, fixture.sf0001)(q))
+      line(q.name, shape(plan(fixture.spark, fixture.sf0001)(q)))
     }
     Files.writeString(File, lines.mkString("", "\n", "\n"), UTF_8)
     println(s"[plandump] $File: ${lines.size} queries")
