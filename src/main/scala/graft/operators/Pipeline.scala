@@ -1238,9 +1238,12 @@ object Pipeline {
     // checked lazily, once per supplier, inside the `parts` value every
     // consumer reads, so column pruning cannot drop it. As a filter on `s`
     // the optimizer would push it below the aggregate and infer it again
-    // on the pair stream through the degree joins.
+    // on the pair stream through the degree joins. A null key groups as
+    // -1, outside the domain, so it fails the same check, and `s` is
+    // non-nullable: the degree joins infer no not-null check on the pair
+    // stream or the lineitem scans.
     val sets = Tables.lineitem(s, d)
-      .groupBy(col("l_suppkey").as("s"))
+      .groupBy(coalesce(col("l_suppkey"), lit(-1L)).as("s"))
       .agg(collect_set(pExpr).as("parts"))
       .withColumn("parts", when(col("s").between(0, Int.MaxValue), col("parts"))
         .otherwise(raise_error(lit(SupplierKeyDomain))))
@@ -1260,15 +1263,15 @@ object Pipeline {
     // be non-negative ints, so s_a·2^32 + s_b is injective) — the
     // aggregate hashes/compares one 8-byte key instead of two and the
     // exchange drops 8 bytes/row;
-    // probed 2.7 → 2.4 s on the pair aggregate alone. Unpacked with
-    // exact integral div/pmod right after the aggregate.
+    // probed 2.7 → 2.4 s on the pair aggregate alone. Unpacked right
+    // after the aggregate with a shift and a mask, which cannot fail.
     posting.select(pairGen.as(Seq("s_a", "s_b")))
       .select((col("s_a") * 4294967296L + col("s_b")).as("sk"))
       .groupBy("sk")
       .agg(count(lit(1)).as("inter"))
       .filter(col("inter") >= 2)
-      .select(expr("sk div 4294967296").as("s_a"),
-              pmod(col("sk"), lit(4294967296L)).as("s_b"), col("inter"))
+      .select(shiftright(col("sk"), 32).as("s_a"),
+              col("sk").bitwiseAND(lit(0xFFFFFFFFL)).as("s_b"), col("inter"))
       .join(broadcast(deg.select(col("s").as("s_a"), col("dg").as("da"))),
         Seq("s_a"))
       .join(broadcast(deg.select(col("s").as("s_b"), col("dg").as("db"))),

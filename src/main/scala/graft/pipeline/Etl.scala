@@ -3,10 +3,11 @@ package graft.pipeline
 import graft.plans.SchemaFlattener
 import graft.sources.Ndjson
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** The reference's three job verbs (SURVEY.md §3) as Spark pipelines over
@@ -79,9 +80,10 @@ final class Etl(root: String,
     }
     require(missing.isEmpty,
       s"commit dir(s) not found: ${missing.mkString(", ")}")
+    // one scan per resource type over every commit of the push
     def readAll(name: String): DataFrame =
-      commitDirs.map(read(spark, _, name, dict(name), projectId))
-        .reduce(_ unionByName _)
+      Ndjson.readOrEmpty(spark, commitDirs, name, dict(name))
+        .withColumn("project_id", lit(projectId))
     val study = readAll("ResearchStudy")
     val patient = readAll("Patient")
     val obs = readAll("Observation")
@@ -99,43 +101,79 @@ final class Etl(root: String,
 
     // flat tables (load_flat x3, :230-258); patient denormalized with
     // related-resource aggregates (denormalize_patient, :229) —
-    // aggregate-then-join so the shuffle carries one row per patient
-    val obsStats = obs.groupBy(col("patient_id").as("id"))
-      .agg(count(lit(1)).as("observation_count"),
-           avg(col("value_numeric")).as("avg_value"))
-    val docStats = docRef.groupBy(col("patient_id").as("id"))
-      .agg(count(lit(1)).as("file_count"), sum(col("content_size")).as("total_bytes"))
+    // aggregate-then-join so the shuffle carries one row per patient, and
+    // one aggregate over observations and documents together: one shuffle
+    // and one join for both
+    val perPatient = obs.select(col("patient_id").as("id"), lit(true).as("is_obs"),
+        lit(false).as("is_doc"), col("value_numeric"),
+        lit(null).cast(LongType).as("content_size"))
+      .unionByName(docRef.select(col("patient_id").as("id"), lit(false).as("is_obs"),
+        lit(true).as("is_doc"), lit(null).cast(DoubleType).as("value_numeric"),
+        col("content_size")))
+      .groupBy("id")
+      .agg(count_if(col("is_obs")).as("observation_count"),
+           avg(col("value_numeric")).as("avg_value"),
+           count_if(col("is_doc")).as("file_count"),
+           sum(col("content_size")).as("total_bytes"))
     try {
-      spark.sparkContext.union(typed.flatMap(_._2.queryExecution.withCachedData
-        .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers }))
-        .count()
+      val filled @ Seq(_, patientFill, obsFill, docFill) = fill(typed.map(_._2))
+      // AQE's partition-coalescing rule (CoalesceShufflePartitions, at its
+      // default parallelism-first target), applied where AQE cannot reach:
+      // a write that reads cached inputs has no shuffle to coalesce. The
+      // target size is the advisory size, lowered so that the write keeps
+      // minPartitionNum tasks (by default one per core), but never below
+      // the minimum partition size; a write never gets more tasks than its
+      // plan has
+      val conf = spark.sessionState.conf
+      val minParts =
+        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_NUM)
+            .getOrElse(spark.sparkContext.defaultParallelism)
+        else 1
+      def sized(df: DataFrame, inputs: Filled*): DataFrame = {
+        val bytes = inputs.map(_.bytes).sum
+        val target = math.max(
+          math.min((bytes + minParts - 1) / minParts,
+                   conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)),
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+        df.coalesce(math.max(1L, (bytes + target - 1) / target).toInt)
+      }
+      // the count rides in as a one-row relation, not a literal: a long
+      // literal is inlined into generated code, so every new count would
+      // compile a new class. A replicated nested-loop join reads the local
+      // rows in the write's own task; a broadcast would be one more job.
+      val patientCount = spark.createDataFrame(
+        java.util.List.of(Row(patientFill.rows)),
+        StructType(Seq(StructField("patient_count", LongType, nullable = false))))
+        .hint("shuffle_replicate_nl")
       Store.putAll(Seq(
         // full-fidelity store (the ES `fhir` index, :291-293)
-        fhirRaw -> typed.map { case (t, df) =>
+        fhirRaw -> sized(typed.map { case (t, df) =>
           df.select(col("project_id"), lit(t).as("resource_type"), col("id"),
                     to_json(struct(df.columns.toIndexedSeq.map(col): _*))
                       .as("resource_json"))
-        }.reduce(_ unionByName _),
+        }.reduce(_ unionByName _), filled: _*),
         // graph store (meta_upload, :224-226): one vertex per resource,
         // edges from the child->patient references
-        vertices -> typed.map { case (t, df) =>
+        vertices -> sized(typed.map { case (t, df) =>
           df.select(col("project_id"), col("id"), lit(t).as("label"))
-        }.reduce(_ unionByName _),
-        edges -> obs.select(col("project_id"), col("id").as("src"),
-                            col("patient_id").as("dst"), lit("observes").as("label"))
+        }.reduce(_ unionByName _), filled: _*),
+        edges -> sized(obs.select(col("project_id"), col("id").as("src"),
+                                  col("patient_id").as("dst"), lit("observes").as("label"))
           .unionByName(
             docRef.select(col("project_id"), col("id").as("src"),
                           col("patient_id").as("dst"), lit("documents").as("label"))),
-        flatPatient -> capped(SchemaFlattener.flatten(patient)
-          .join(obsStats, Seq("id"), "left")
-          .join(docStats, Seq("id"), "left")
+          obsFill, docFill),
+        flatPatient -> sized(capped(SchemaFlattener.flatten(patient)
+          .join(perPatient, Seq("id"), "left")
           .na.fill(0, Seq("observation_count", "file_count", "total_bytes"))),
-        flatObservation -> capped(SchemaFlattener.flatten(obs)),
-        flatFile -> capped(SchemaFlattener.flatten(docRef)),
+          patientFill, obsFill, docFill),
+        flatObservation -> sized(capped(SchemaFlattener.flatten(obs)), obsFill),
+        flatFile -> sized(capped(SchemaFlattener.flatten(docRef)), docFill),
         // discovery summary (:261-289): one row per project; orderBy before
-        // limit(1) so the chosen study row is partition-order independent
-        discovery -> study.orderBy("id").limit(1)
-          .crossJoin(patient.agg(count(lit(1)).as("patient_count")))
+        // limit(1) so the chosen study row is partition-order independent;
+        // the count is of every patient, not only a capped load's
+        discovery -> study.orderBy("id").limit(1).crossJoin(patientCount)
           .select(col("project_id"), col("patient_count"), col("description"),
                   col("identifier_coding"))),
         Seq(projectId))
@@ -202,11 +240,6 @@ final class Etl(root: String,
     import spark.implicits._
     flatPatient.readProject(spark, projectId).as[FlatPatient]
   }
-
-  private def read(spark: SparkSession, dir: String, name: String,
-                   schema: StructType, projectId: String): DataFrame =
-    Ndjson.readOrEmpty(spark, dir, name, schema)
-      .withColumn("project_id", lit(projectId))
 }
 
 /** Typed row of the denormalized patient table — `Dataset[T]` surface for
@@ -218,6 +251,31 @@ case class FlatPatient(project_id: String, id: String, gender: String,
                        file_count: Long, total_bytes: Long)
 
 object Etl {
+  /** Rows and in-memory bytes of one filled cache. */
+  private final case class Filled(rows: Long, bytes: Long)
+
+  /** Fill the persisted `inputs`' caches in ONE job, no shuffle, and
+    * return each input's exact row count and cached bytes, summed over its
+    * cached batches. Task results, unlike an accumulator, count a
+    * recomputed block once. */
+  private def fill(inputs: Seq[DataFrame]): Seq[Filled] = {
+    val buffers = inputs.map(_.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
+    }.getOrElse(throw new IllegalStateException("fill: input is not persisted")))
+    val perPartition = inputs.head.sparkSession.sparkContext.union(
+      buffers.zipWithIndex.map { case (batches, i) =>
+        batches.mapPartitions { it =>
+          var rows, bytes = 0L
+          it.foreach { b => rows += b.numRows; bytes += b.sizeInBytes }
+          Iterator.single((i, rows, bytes))
+        }
+      }).collect()
+    inputs.indices.map { i =>
+      val mine = perPartition.filter(_._1 == i)
+      Filled(mine.map(_._2).sum, mine.map(_._3).sum)
+    }
+  }
+
   /** Post-simplify flat schemas (FIXTURES.md §A.2). */
   val patientSchema: StructType = StructType(Seq(
     StructField("id", StringType),

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
 
 /** Project-partitioned parquet store — the engine's replacement for the
@@ -68,15 +69,18 @@ final class Store(private val root: String,
   }
 
   /** Read the whole table; partition filters prune directories. */
-  def read(spark: SparkSession): DataFrame = {
+  def read(spark: SparkSession): DataFrame =
+    storedSchema(spark).fold(spark.read)(spark.read.schema).parquet(root)
+
+  /** The `_schema.ddl` sidecar's schema, if the store has one. */
+  private def storedSchema(spark: SparkSession): Option[StructType] = {
     val fs = fileSystem(spark)
-    if (fs.exists(schemaPath)) {
+    if (!fs.exists(schemaPath)) None
+    else {
       val in = fs.open(schemaPath)
-      val ddl = try new String(
-        in.readAllBytes(), "UTF-8") finally in.close()
-      spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl)).parquet(root)
-    } else spark.read.parquet(root)
+      try Some(StructType.fromDDL(new String(in.readAllBytes(), "UTF-8")))
+      finally in.close()
+    }
   }
 
   /** Compact one project's partition to `nFiles` files — the maintenance
@@ -199,10 +203,20 @@ final class Store(private val root: String,
   def isInitialized(spark: SparkSession): Boolean =
     fileSystem(spark).exists(path)
 
-  /** Read one project's partition (get verb) — a directory prune, not a
-    * scan-and-filter. */
-  def readProject(spark: SparkSession, projectId: String): DataFrame =
-    read(spark).filter(col(partitionCols.head) === projectId)
+  /** Read one project's partition (get verb): the scan lists only the
+    * project's own directory (`basePath` keeps the partition columns), not
+    * every project's files; its partition filter is then a no-op prune.
+    * A project with no directory (deleted, or never written) reads through
+    * the whole-table scan, which the filter leaves empty. */
+  def readProject(spark: SparkSession, projectId: String): DataFrame = {
+    val dir = new Path(path, partitionDir(projectId))
+    val own = storedSchema(spark) match {
+      case Some(schema) if fileSystem(spark).exists(dir) =>
+        spark.read.option("basePath", root).schema(schema).parquet(dir.toString)
+      case _ => read(spark)
+    }
+    own.filter(col(partitionCols.head) === projectId)
+  }
 
   /** Delete one project (delete verb): drop its partition directory —
     * the parquet-table equivalent of the reference's per-project ES

@@ -24,10 +24,19 @@ object Ndjson {
     * the same schema when the file is absent. `dir` is a Hadoop path (a
     * plain path or a URI such as `file:///…`). */
   def readOrEmpty(spark: SparkSession, dir: String, name: String,
+                  schema: StructType): DataFrame =
+    readOrEmpty(spark, Seq(dir), name, schema)
+
+  /** Read `<name>.ndjson` from every dir that has one as ONE scan (one
+    * file listing, one relation, one broadcast of the Hadoop conf), not a
+    * union of per-dir scans; empty DataFrame with the schema when no dir
+    * has the file. */
+  def readOrEmpty(spark: SparkSession, dirs: Seq[String], name: String,
                   schema: StructType): DataFrame = {
-    val path = new Path(dir, s"$name.ndjson")
-    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
-      spark.read.schema(schema).json(path.toString)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val paths = dirs.map(new Path(_, s"$name.ndjson"))
+      .filter(p => p.getFileSystem(conf).exists(p)).map(_.toString)
+    if (paths.nonEmpty) spark.read.schema(schema).json(paths: _*)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 }

@@ -2,15 +2,19 @@ package graft
 
 import graft.operators.PlanDump
 import graft.ops.LocalFs
-import graft.pipeline.{Etl, JobWatch}
-import graft.sources.ZipNdjson
+import graft.pipeline.{Dictionary, Etl, JobWatch}
+import graft.plans.SchemaFlattener
+import graft.sources.{Ndjson, ZipNdjson}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SQLExecution, SparkPlan}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
@@ -277,10 +281,11 @@ class EtlSpec extends SparkSpec {
     assert(other() === otherRows)
   }
 
-  /** Rows each `<Type>.ndjson` file's scans produced while `body` ran,
-    * summed over every scan operator that executed (a cached frame's scan
-    * counts once, however many queries read the cache). */
-  private def ndjsonRowsScanned(body: => Unit): Map[String, Long] = {
+  /** Every NDJSON scan operator that executed while `body` ran, as its
+    * resource type and output rows (a cached frame's scan counts once,
+    * however many queries read the cache). A scan over several commit
+    * dirs has one root path per dir, all named `<Type>.ndjson`. */
+  private def ndjsonScans(body: => Unit): Seq[(String, Long)] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -296,11 +301,19 @@ class EtlSpec extends SparkSpec {
       new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
     plans.asScala.flatMap(PlanDump.operators(_, executed = true))
       .foreach { case s: FileSourceScanExec => scans.add(s); case _ => }
-    scans.asScala.toSeq.flatMap(s => s.relation.location.rootPaths.map(_.getName)
-        .filter(_.endsWith(".ndjson"))
-        .map(_.stripSuffix(".ndjson") -> s.metrics("numOutputRows").value))
-      .groupMapReduce(_._1)(_._2)(_ + _)
+    scans.asScala.toSeq.flatMap { s =>
+      val names = s.relation.location.rootPaths.map(_.getName).distinct
+      if (!names.forall(_.endsWith(".ndjson"))) None
+      else {
+        assert(names.size === 1, s"one scan over several types: $names")
+        Some(names.head.stripSuffix(".ndjson") -> s.metrics("numOutputRows").value)
+      }
+    }
   }
+
+  /** Rows each `<Type>.ndjson` file's scans produced while `body` ran. */
+  private def ndjsonRowsScanned(body: => Unit): Map[String, Long] =
+    ndjsonScans(body).groupMapReduce(_._1)(_._2)(_ + _)
 
   test("a put scans each resource file once") {
     val etl = new Etl(Files.createTempDirectory("etl-once").toString)
@@ -320,9 +333,169 @@ class EtlSpec extends SparkSpec {
     val (_, put) = JobWatch.measure(spark.sparkContext) {
       etl.put(spark, "aced-demo", dir)
     }
-    // the fill job and the seven writes' 13 jobs; no write submits a
-    // cache-stage job of its own (18 jobs when they did)
-    assert(put.jobs === 14)
+    // the fill job and the seven writes' 9 jobs: one each, and two more
+    // for flat_patient's aggregate (its shuffle and its broadcast); no
+    // write submits a cache-stage job of its own (18 jobs when they did)
+    assert(put.jobs === 10)
+  }
+
+  /** The import's inputs as the put reads them: one frame per type with
+    * its `project_id`. */
+  private def inputs(dirs: Seq[String], projectId: String): Map[String, DataFrame] =
+    Seq("ResearchStudy", "Patient", "Observation", "DocumentReference").map { t =>
+      t -> Ndjson.readOrEmpty(spark, dirs, t, Dictionary.default(t))
+        .withColumn("project_id", lit(projectId))
+    }.toMap
+
+  private def sortedJson(df: DataFrame): Seq[String] = df.toJSON.collect().sorted.toSeq
+
+  test("a two-commit put scans each resource type once over both commits") {
+    val c1 = commitDir()
+    val c2 = Files.createTempDirectory("commit-second")
+    Files.writeString(c2.resolve("Patient.ndjson"),
+      """{"id":"p3","gender":"male","birthDate":"1970-01-01","identifier":[]}""" + "\n")
+    Files.writeString(c2.resolve("Observation.ndjson"),
+      """{"id":"o3","patient_id":"p3","code":"hr","value_numeric":70.0}""" + "\n")
+    val commits = Seq(c1, c2.toString)
+    val etl = new Etl(Files.createTempDirectory("etl-two").toString)
+    val scans = ndjsonScans(etl.put(spark, "aced-demo", commits, None))
+    assert(scans.sortBy(_._1) === Seq("Observation" -> 3L, "Patient" -> 3L,
+                                      "ResearchStudy" -> 1L))
+    // the rows of the union of one scan per commit dir
+    def perCommit(t: String): DataFrame =
+      commits.map(Ndjson.readOrEmpty(spark, _, t, Dictionary.default(t))).reduce(_ unionByName _)
+    Seq("Patient", "Observation", "ResearchStudy", "DocumentReference").foreach { t =>
+      assert(sortedJson(inputs(commits, "aced-demo")(t).drop("project_id")) ===
+        sortedJson(perCommit(t)))
+    }
+    assert(sortedJson(etl.flatObservation.readProject(spark, "aced-demo")
+      .drop("project_id")) === sortedJson(SchemaFlattener.flatten(perCommit("Observation"))))
+    assert(etl.fhirRaw.readProject(spark, "aced-demo").count() === 7)
+  }
+
+  test("flat_patient and discovery match the two-aggregate, counting-job formulation") {
+    val dir = Files.createTempDirectory("commit-edges")
+    // p1: observations and documents, one document without a size; p2:
+    // observations only, one without a value; p3: documents only; p4:
+    // neither; p9's observation and a document without a patient match
+    // nobody
+    Files.writeString(dir.resolve("Patient.ndjson"), Seq("p1", "p2", "p3", "p4").map(p =>
+      s"""{"id":"$p","gender":"female","birthDate":"1980-02-03","identifier":[]}""")
+      .mkString("", "\n", "\n"))
+    Files.writeString(dir.resolve("Observation.ndjson"),
+      """{"id":"o1","patient_id":"p1","code":"hr","value_numeric":61.0}
+        |{"id":"o2","patient_id":"p1","code":"hr","value_numeric":63.5}
+        |{"id":"o3","patient_id":"p2","code":"hr"}
+        |{"id":"o4","patient_id":"p2","code":"hr","value_numeric":1.25}
+        |{"id":"o9","patient_id":"p9","code":"hr","value_numeric":2.0}
+        |""".stripMargin)
+    Files.writeString(dir.resolve("DocumentReference.ndjson"),
+      """{"id":"d1","patient_id":"p1","content_url":"s3://b/1","content_size":10}
+        |{"id":"d2","patient_id":"p1","content_url":"s3://b/2"}
+        |{"id":"d3","patient_id":"p3","content_url":"s3://b/3","content_size":7}
+        |{"id":"d4","content_url":"s3://b/4","content_size":5}
+        |""".stripMargin)
+    val noStudy = Files.createTempDirectory("commit-edges-nostudy")
+    Files.list(dir).forEach(f => Files.copy(f, noStudy.resolve(f.getFileName)))
+    Files.writeString(dir.resolve("ResearchStudy.ndjson"),
+      """{"id":"s2","status":"active","description":"second","identifier_coding":[]}
+        |{"id":"s1","status":"active","description":"first","identifier_coding":["a#b"]}
+        |""".stripMargin)
+
+    // the formulation this put replaced: one aggregate and one join per
+    // child type, and a counting aggregate cross-joined to the study
+    def reference(in: Map[String, DataFrame]): (DataFrame, DataFrame) = {
+      val (study, patient) = (in("ResearchStudy"), in("Patient"))
+      val (obs, docRef) = (in("Observation"), in("DocumentReference"))
+      val obsStats = obs.groupBy(col("patient_id").as("id"))
+        .agg(count(lit(1)).as("observation_count"), avg(col("value_numeric")).as("avg_value"))
+      val docStats = docRef.groupBy(col("patient_id").as("id"))
+        .agg(count(lit(1)).as("file_count"), sum(col("content_size")).as("total_bytes"))
+      (SchemaFlattener.flatten(patient)
+         .join(obsStats, Seq("id"), "left").join(docStats, Seq("id"), "left")
+         .na.fill(0, Seq("observation_count", "file_count", "total_bytes")),
+       study.orderBy("id").limit(1)
+         .crossJoin(patient.agg(count(lit(1)).as("patient_count")))
+         .select(col("project_id"), col("patient_count"), col("description"),
+                 col("identifier_coding")))
+    }
+    val etl = new Etl(Files.createTempDirectory("etl-edges").toString)
+    for ((commit, limit) <- Seq(dir -> None, dir -> Some(2), noStudy -> None)) {
+      etl.put(spark, "aced-demo", Seq(commit.toString), limit)
+      val (flat, disc) = reference(inputs(Seq(commit.toString), "aced-demo"))
+      // a store reads its partition column last
+      val stored = etl.flatPatient.readProject(spark, "aced-demo")
+        .select(flat.columns.toIndexedSeq.map(col): _*)
+      if (limit.isEmpty) assert(sortedJson(stored) === sortedJson(flat))
+      else {
+        assert(stored.count() === 2)
+        assert(sortedJson(stored).toSet.subsetOf(sortedJson(flat).toSet))
+      }
+      // the count is of every patient, not only the capped load's
+      assert(sortedJson(etl.discovery.readProject(spark, "aced-demo")
+        .select(disc.columns.toIndexedSeq.map(col): _*)) === sortedJson(disc))
+    }
+    assert(sortedJson(reference(inputs(Seq(dir.toString), "aced-demo"))._1) ===
+      Seq(
+        """{"id":"p1","gender":"female","birthDate":"1980-02-03","identifier":[],"project_id":"aced-demo","observation_count":2,"avg_value":62.25,"file_count":2,"total_bytes":10}""",
+        """{"id":"p2","gender":"female","birthDate":"1980-02-03","identifier":[],"project_id":"aced-demo","observation_count":2,"avg_value":1.25,"file_count":0,"total_bytes":0}""",
+        """{"id":"p3","gender":"female","birthDate":"1980-02-03","identifier":[],"project_id":"aced-demo","observation_count":0,"file_count":1,"total_bytes":7}""",
+        """{"id":"p4","gender":"female","birthDate":"1980-02-03","identifier":[],"project_id":"aced-demo","observation_count":0,"file_count":0,"total_bytes":0}"""))
+    assert(etl.discovery.readProject(spark, "aced-demo").isEmpty) // no study
+  }
+
+  test("a warm put compiles nothing, also when the patient count changes") {
+    val a = commitDir()
+    val b = Files.createTempDirectory("commit-more")
+    Files.list(Paths.get(a)).forEach(f => Files.copy(f, b.resolve(f.getFileName)))
+    Files.writeString(b.resolve("Patient.ndjson"), patientLines +
+      """{"id":"p3","gender":"male","birthDate":"1970-01-01","identifier":[]}""" + "\n")
+    Files.writeString(b.resolve("Observation.ndjson"), obsLines.linesIterator.take(1)
+      .mkString("", "\n", "\n"))
+    val etl = new Etl(Files.createTempDirectory("etl-compiles").toString)
+    etl.put(spark, "aced-a", a)
+    etl.put(spark, "aced-a", a)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    etl.put(spark, "aced-b", b.toString)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles)
+    assert(etl.discovery.readProject(spark, "aced-b").select("patient_count")
+      .collect().map(_.getLong(0)).toSeq === Seq(3L))
+  }
+
+  test("each store write is sized from the cached bytes it reads") {
+    val c2 = Files.createTempDirectory("commit-sized")
+    Files.writeString(c2.resolve("Observation.ndjson"),
+      """{"id":"o3","patient_id":"p2","code":"hr","value_numeric":70.0}""" + "\n")
+    val commits = Seq(commitDir(), c2.toString)
+    val root = Files.createTempDirectory("etl-sized")
+    def obsFiles(): Int = {
+      val etl = new Etl(root.toString)
+      etl.put(spark, "aced-demo", commits, None)
+      assert(etl.flatObservation.readProject(spark, "aced-demo").count() === 3)
+      root.resolve("flat_observation/project_id=aced-demo").toFile.list()
+        .count(_.startsWith("part-"))
+    }
+    // a few hundred cached bytes, below the minimum partition size: one
+    // task, one file
+    assert(obsFiles() === 1)
+    def withConf(kv: (String, String)*)(body: => Int): Int = {
+      val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val coalesce = "spark.sql.adaptive.coalescePartitions"
+    val minSize = s"$coalesce.minPartitionSize" -> "1b"
+    // an advisory size below the cached bytes: one file per commit's scan
+    // partition, as many as the plan has
+    assert(withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16b",
+      minSize)(obsFiles()) === 2)
+    // the target size is lowered to keep minPartitionNum tasks (by default
+    // one per core) ...
+    assert(withConf(minSize, s"$coalesce.minPartitionNum" -> "4")(obsFiles()) === 2)
+    // ... unless parallelism-first is off
+    assert(withConf(minSize, s"$coalesce.minPartitionNum" -> "4",
+      s"$coalesce.parallelismFirst" -> "false")(obsFiles()) === 1)
   }
 
   test("a put and a get set every permission in-process") {

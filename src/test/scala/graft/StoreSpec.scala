@@ -26,6 +26,28 @@ class StoreSpec extends SparkSpec {
       .map(_.getString(0)).toSeq === Seq("aced-a"))
   }
 
+  test("readProject lists only the project's own directory") {
+    val spark2 = spark
+    import spark2.implicits._
+    val store = new Store(Files.createTempDirectory("store-own").toString)
+    // Spark writes this id as project_id=aced-brca%3Av2
+    store.put(Seq(("aced-a", "p1"), ("aced-brca:v2", "p2"), ("aced-brca:v2", "p3"))
+      .toDF("project_id", "id"))
+    val escaped = store.readProject(spark, "aced-brca:v2")
+    val roots = escaped.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName)
+    }
+    assert(roots === Seq(Seq("project_id=aced-brca%3Av2")))
+    assert(escaped.collect().map(r => (r.getAs[String]("project_id"), r.getAs[String]("id")))
+      .sorted.toSeq === Seq(("aced-brca:v2", "p2"), ("aced-brca:v2", "p3")))
+    store.deleteProject(spark, "aced-brca:v2")
+    val gone = store.readProject(spark, "aced-brca:v2")
+    assert(gone.count() === 0)
+    assert(gone.schema === store.read(spark).schema)
+    assert(store.readProject(spark, "aced-a").count() === 1)
+  }
+
   test("schema evolution: new column readable everywhere, old rows null") {
     import spark.implicits._
     val root = Files.createTempDirectory("store-evolve").toString
