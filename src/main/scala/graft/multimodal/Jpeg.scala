@@ -1,20 +1,39 @@
 package graft.multimodal
 
-/** Hand-written BASELINE JPEG decoder (ITU-T T.81 / ISO 10918-1,
-  * public spec) — closes the one declared codec stub (VERDICT r9 task
-  * 3). Scope: baseline sequential DCT, Huffman entropy coding, 8-bit
-  * samples, 1 or 3 components with no chroma subsampling beyond what
-  * [[decode]] checks (h/v factors equal across components); restart
-  * markers handled. Progressive/arithmetic/12-bit streams return None.
+/** Hand-written JPEG decoder (ITU-T T.81 / ISO 10918-1, public spec)
+  * for baseline sequential (SOF0) and progressive (SOF2, Annex G)
+  * frames. Scope: Huffman entropy coding, 8-bit samples, 1 or 3
+  * components with 1×1 sampling factors on every component
+  * (grayscale always; color only when 4:4:4); restart markers
+  * handled. Other frame types (extended, lossless, arithmetic,
+  * hierarchical) return None.
   *
-  * The INDEPENDENT encoder in specs and the `multimodal_jpeg` query is
-  * the JDK's ImageIO JPEG writer (native IJG libjpeg behind
-  * `com.sun.imageio.plugins.jpeg`) — their encoder, this decoder, so
-  * the round trip crosses two implementations like the BMP/WAV paths.
-  * Two-tier verification (JPEG is lossy, so the BMP luma-identity
-  * trick doesn't transfer directly):
+  * One pipeline for both frame types, per G.2: every scan accumulates
+  * into a per-component QUANTIZED-coefficient raster (zig-zag index
+  * order — successive approximation is defined on quantized values),
+  * and only then does [[finalizeImage]] dequantize, IDCT and color
+  * convert. A sequential scan is the progressive first-scan pair run
+  * over the whole band: DC DPCM at point transform 0, then AC
+  * run-length over [1, 63]. The progressive scans implement the full
+  * Annex G set, because the JDK writer's progressive script emits all
+  * of it: spectral selection (G.1.1.1.1: AC scans are single-component
+  * bands [Ss..Se]), successive approximation in BOTH directions (DC
+  * first scan at point transform Al with a later one-bit-per-block
+  * refinement; AC first scans refined twice), EOB runs (G.1.2.2:
+  * EOBn symbols span up to 2^14 blocks), and interleaved DC scans over
+  * multi-component frames. A progressive stream whose scans complete
+  * therefore reconstructs bit-identically to the baseline encode of
+  * the same coefficients.
   *
-  *  - EXACT tier (the oracle query): images built from uniform 8×8
+  * The INDEPENDENT encoder in specs and the `multimodal_jpeg` /
+  * `multimodal_jpeg_prog` queries is the JDK's ImageIO JPEG writer
+  * (native IJG libjpeg behind `com.sun.imageio.plugins.jpeg`) — their
+  * encoder, this decoder, so the round trip crosses two
+  * implementations like the BMP/WAV paths. Two-tier verification (JPEG
+  * is lossy, so the BMP luma-identity trick doesn't transfer
+  * directly):
+  *
+  *  - EXACT tier (the oracle queries): images built from uniform 8×8
   *    blocks have one nonzero DCT coefficient (DC = 8·(v−128),
   *    computed exactly by any conforming FDCT), so the whole lossy
   *    chain collapses to integer arithmetic — quantize
@@ -27,17 +46,27 @@ package graft.multimodal
   *    IDCT mismatch allowance (spec-permitted per-sample variance
   *    between conforming IDCTs).
   *
-  * All bit-twiddling below follows the spec text (F.2 decode
+  * Robustness contract (the [[Mp3]]/[[Mp4]] discipline): corrupt or
+  * hostile input degrades to None, never throws, never hangs (every
+  * scan walks a bounded MCU count; the bit reader pads with zero bits
+  * at segment end), and nothing is allocated from DECLARED sizes
+  * beyond a cap of 2^26 samples over all components, checked at the
+  * frame header (the Int coefficient raster takes 4 bytes a sample,
+  * so up to 256 MB, plus the byte planes the assembler fills).
+  *
+  * All bit-twiddling below follows the spec text (F.2 and G.2 decode
   * procedures, A.3.3 IDCT, Annex K tables are only on the encoder
   * side), not any existing decoder's source.
   */
 object Jpeg {
 
   /** Decoded image: gray (1 comp) or RGB (3 comps, row-major
-    * interleaved), plus the DC quantization value of component 0 —
-    * surfaced because the exact-tier oracle needs it. */
+    * interleaved), the DC quantization value of component 0 —
+    * surfaced because the exact-tier oracle needs it — and whether the
+    * frame was progressive (SOF2) rather than baseline (SOF0). */
   final case class JpegImage(width: Int, height: Int, nComp: Int,
-                             pixels: Array[Byte], dcQuant: Int)
+                             pixels: Array[Byte], dcQuant: Int,
+                             progressive: Boolean)
 
   /** True for SOI-led streams — the magic sniff, mirroring
     * [[Media.isImageContainer]]'s style. */
@@ -48,7 +77,7 @@ object Jpeg {
   // ---- Huffman table: canonical per T.81 C.2 ----------------------
   /** (code lengths histogram BITS[1..16], values HUFFVAL) expanded to
     * flat lookup arrays via the spec's GenerateCodeTable (C.2). */
-  private[multimodal] final class Huff(bits: Array[Int], vals: Array[Byte]) {
+  private final class Huff(bits: Array[Int], vals: Array[Byte]) {
     // mincode/maxcode/valptr per code length, T.81 F.2.2.3 figure F.15
     val minCode = new Array[Int](17)
     val maxCode = new Array[Int](17)
@@ -73,7 +102,7 @@ object Jpeg {
 
   /** Entropy-coded-segment bit reader with byte-stuffing removal
     * (0xFF00 → 0xFF) and marker detection, per F.1.2.3. */
-  private[multimodal] final class BitReader(buf: Array[Byte], var pos: Int) {
+  private final class BitReader(buf: Array[Byte], var pos: Int) {
     private var bitBuf = 0
     private var bitCnt = 0
     var hitMarker = false
@@ -131,7 +160,7 @@ object Jpeg {
     }
   }
 
-  private[multimodal] val ZigZag: Array[Int] = Array(
+  private val ZigZag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
@@ -144,8 +173,8 @@ object Jpeg {
     * General blocks use the direct double-precision cosine basis with
     * one final round; against the JDK's own reader this sits well
     * inside the T.81 Annex A per-sample conformance window (JpegSpec
-    * asserts ≤1). */
-  private[multimodal] def idct8x8(coef: Array[Int], out: Array[Int]): Unit = {
+    * asserts ≤2). */
+  private def idct8x8(coef: Array[Int], out: Array[Int]): Unit = {
     var dcOnly = true
     var i = 1
     while (i < 64 && dcOnly) { if (coef(i) != 0) dcOnly = false; i += 1 }
@@ -189,49 +218,60 @@ object Jpeg {
       cu * Math.cos((2 * x + 1) * u * Math.PI / 16.0) / 2.0
   }
 
-  /** Decode a baseline JPEG. None for non-JPEG magic, progressive/
-    * arithmetic frames, bit depths ≠ 8, unsupported sampling, or a
+  /** Decode a baseline or progressive JPEG. None for non-JPEG magic,
+    * other frame types, bit depths ≠ 8, unsupported sampling, or a
     * corrupt stream. Grayscale decodes to 1 byte/pixel; YCbCr (3
-    * comps, equal sampling factors i.e. 4:4:4) to interleaved RGB via
-    * the JFIF full-range matrix. */
+    * comps, 4:4:4) to interleaved RGB via the JFIF full-range
+    * matrix. */
   def decode(content: Array[Byte]): Option[JpegImage] = {
     if (!isJpeg(content)) return None
     try decodeInner(content)
     catch { case _: Exception => None }
   }
 
-  // one quant table slot per destination id, 0..3
   private def decodeInner(buf: Array[Byte]): Option[JpegImage] = {
+    // one quant table slot per destination id, 0..3
     val quant = Array.ofDim[Int](4, 64)
     val dcTab = new Array[Huff](4)
     val acTab = new Array[Huff](4)
     var width = 0; var height = 0
     var nComp = 0
-    // per component: id, h, v, quant slot
+    // per component: id, quant slot
     var compQ: Array[Int] = null
     var compId: Array[Int] = null
     var restartInterval = 0
+    var frame = 0 // SOF marker parsed: 0xC0 sequential, 0xC2 progressive
+    // per component: quantized coefficients, zig-zag index order,
+    // block-major — allocated at the SOF once dimensions pass the cap
+    var coefs: Array[Array[Int]] = null
+    var blocksX = 0; var blocksY = 0
+    var anyScan = false
 
     def u16(p: Int): Int = ((buf(p) & 0xFF) << 8) | (buf(p + 1) & 0xFF)
+    def image = finalizeImage(coefs, quant, compQ, width, height, nComp,
+      blocksX, blocksY, progressive = frame == 0xC2)
 
     var pos = 2 // past SOI
-    var sofSeen = false
-    while (pos + 4 <= buf.length) {
+    var done = false
+    while (!done && pos + 2 <= buf.length) {
       if ((buf(pos) & 0xFF) != 0xFF) return None
       val marker = buf(pos + 1) & 0xFF
-      if (marker == 0xD8) { pos += 2 } // stray SOI
-      else if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD7)) {
-        pos += 2 // standalone markers
+      if (marker == 0xD9) { done = true } // EOI: finalize below
+      else if (marker == 0xD8 || marker == 0x01 ||
+               (marker >= 0xD0 && marker <= 0xD7)) {
+        pos += 2 // stray SOI, TEM, RSTn: standalone markers
       } else {
+        if (pos + 4 > buf.length) return None
         val len = u16(pos + 2)
         val seg = pos + 4
+        if (seg + len - 2 > buf.length) return None
         marker match {
-          case 0xDB => // DQT
+          case 0xDB => // DQT, natural-order storage
             var p = seg
             while (p < seg + len - 2) {
               val pq = (buf(p) >> 4) & 0xF
               val tq = buf(p) & 0xF
-              if (pq != 0) return None // 16-bit tables: not baseline
+              if (pq != 0) return None // 16-bit tables: 12-bit frames only
               var i = 0
               while (i < 64) {
                 quant(tq)(ZigZag(i)) = buf(p + 1 + i) & 0xFF
@@ -239,8 +279,8 @@ object Jpeg {
               }
               p += 65
             }
-          case 0xC4 => // DHT
-            var p = seg
+          case 0xC4 => // DHT — progressive streams redefine slots
+            var p = seg // between scans; later tables shadow earlier
             while (p < seg + len - 2) {
               val tc = (buf(p) >> 4) & 0xF
               val th = buf(p) & 0xF
@@ -256,7 +296,9 @@ object Jpeg {
               if (tc == 0) dcTab(th) = h else acTab(th) = h
               p += 17 + total
             }
-          case 0xC0 => // SOF0: baseline
+          case 0xC0 | 0xC2 => // SOF0 baseline / SOF2 progressive, Huffman
+            if (frame != 0 && frame != marker) return None // mixed frames
+            frame = marker
             if (buf(seg) != 8) return None // precision
             height = u16(seg + 1); width = u16(seg + 3)
             nComp = buf(seg + 5) & 0xFF
@@ -264,124 +306,267 @@ object Jpeg {
             compId = new Array[Int](nComp)
             compQ = new Array[Int](nComp)
             var ci = 0
-            var hv0 = -1
             while (ci < nComp) {
               val p = seg + 6 + 3 * ci
               compId(ci) = buf(p) & 0xFF
-              val hv = buf(p + 1) & 0xFF
-              if (hv0 < 0) hv0 = hv
               // 1×1 factors on every component: one 8×8 block per
-              // component per MCU — the layout the scan walk below
-              // implements (grayscale always; color only when 4:4:4)
-              if (hv != hv0 || hv != 0x11) return None
+              // component per MCU — the layout the scan walk implements
+              if ((buf(p + 1) & 0xFF) != 0x11) return None
               compQ(ci) = buf(p + 2) & 0xFF
               ci += 1
             }
-            sofSeen = true
-          case 0xC1 | 0xC2 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
+            blocksX = (width + 7) / 8
+            blocksY = (height + 7) / 8
+            // The SOF dimensions are untrusted input: 65535×65535×3
+            // would allocate ~48 GB of coefficients before a single
+            // entropy bit is read, and an OutOfMemoryError is an Error
+            // the decode() catch cannot convert to None (ADVICE r10).
+            // Cap the frame at 2^26 samples over all components — far
+            // above any corpus blob this engine synthesizes — and reject
+            // oversized declared dimensions as a corrupt stream.
+            val planeBytes = blocksX.toLong * 8L * blocksY.toLong * 8L
+            if (planeBytes <= 0L || planeBytes * nComp > (1L << 26))
+              return None
+            coefs = Array.ofDim[Int](nComp, blocksX * blocksY * 64)
+          case 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
                0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-            return None // non-baseline frame types
+            return None // extended, lossless, hierarchical, arithmetic
           case 0xDD => restartInterval = u16(seg)
-          case 0xDA => // SOS — entropy-coded data follows
-            if (!sofSeen) return None
+          case 0xDA =>
+            if (coefs == null) return None
+            val sequential = frame == 0xC0
             val ns = buf(seg) & 0xFF
-            if (ns != nComp) return None
-            val scanDc = new Array[Int](nComp)
-            val scanAc = new Array[Int](nComp)
+            // a sequential frame is one scan interleaving every component
+            if (ns < 1 || ns > nComp || (sequential && ns != nComp))
+              return None
+            val scanComp = Array.range(0, ns)
+            val scanDc = new Array[Int](ns)
+            val scanAc = new Array[Int](ns)
             var k = 0
             while (k < ns) {
               val cs = buf(seg + 1 + 2 * k) & 0xFF
               val ci = compId.indexOf(cs)
               if (ci < 0) return None
-              scanDc(ci) = (buf(seg + 2 + 2 * k) >> 4) & 0xF
-              scanAc(ci) = buf(seg + 2 + 2 * k) & 0xF
+              // sequential blocks interleave in frame component order
+              val slot = if (sequential) ci else k
+              scanComp(slot) = ci
+              scanDc(slot) = (buf(seg + 2 + 2 * k) >> 4) & 0xF
+              scanAc(slot) = buf(seg + 2 + 2 * k) & 0xF
               k += 1
             }
-            return decodeScan(buf, seg + len - 2, width, height, nComp,
-              compQ, quant, dcTab, acTab, scanDc, scanAc,
-              restartInterval)
-          case _ => () // APPn/COM/others: skip
+            // T.81 fixes a sequential scan's band at [0, 63] with no point
+            // transform; only a progressive scan header carries them
+            val band = seg + 1 + 2 * ns
+            val (ss, se, ah, al) =
+              if (sequential) (0, 63, 0, 0)
+              else (buf(band) & 0xFF, buf(band + 1) & 0xFF,
+                    (buf(band + 2) >> 4) & 0xF, buf(band + 2) & 0xF)
+            if (!sequential &&
+                ((if (ss == 0) se != 0 // DC scans are [0,0]
+                  else ns != 1 || se < ss || se > 63) || // G.1.1.1.1
+                 al > 13 || ah > 13)) return None
+            val r = new BitReader(buf, seg + len - 2)
+            if (!decodeOneScan(buf, r, coefs, blocksX, blocksY, scanComp,
+                  scanDc, scanAc, dcTab, acTab, ss, se, ah, al,
+                  restartInterval)) return None
+            // a sequential frame's one scan is the whole image: no EOI
+            // or later marker is needed after it
+            if (sequential) return image
+            // the marker terminating the scan: first FF followed by a
+            // real (non-stuffing, non-restart) marker at or after the
+            // reader
+            var p = r.pos
+            while (p + 1 < buf.length &&
+                   !((buf(p) & 0xFF) == 0xFF && {
+                     val m = buf(p + 1) & 0xFF
+                     m != 0x00 && !(m >= 0xD0 && m <= 0xD7)
+                   })) p += 1
+            if (p + 1 >= buf.length) return None
+            anyScan = true
+            pos = p
+          case _ => () // APPn/COM/DNL: skip
         }
-        pos += 2 + len
+        if (marker != 0xDA) pos += 2 + len
       }
     }
-    None
+    if (!anyScan) return None
+    image
   }
 
-  /** The ECS walk: MCU raster, per-component DC DPCM + AC run-length,
-    * restart-marker resync, IDCT per block. */
-  private def decodeScan(buf: Array[Byte], start: Int,
-                         width: Int, height: Int, nComp: Int,
-                         compQ: Array[Int], quant: Array[Array[Int]],
-                         dcTab: Array[Huff], acTab: Array[Huff],
-                         scanDc: Array[Int], scanAc: Array[Int],
-                         restartInterval: Int): Option[JpegImage] = {
-    val r = new BitReader(buf, start)
-    val mcusX = (width + 7) / 8
-    val mcusY = (height + 7) / 8
-    // The SOF dimensions are untrusted input: 65535×65535×3 would
-    // allocate ~12 GB of planes before a single entropy bit is read,
-    // and an OutOfMemoryError is an Error the decode() catch cannot
-    // convert to None (ADVICE r10). Cap the raster at 64 MB/component
-    // — far above any corpus blob this engine synthesizes — and reject
-    // oversized declared dimensions as a corrupt stream.
-    val planeBytes = mcusX.toLong * 8L * mcusY.toLong * 8L
-    if (planeBytes <= 0L || planeBytes * nComp > (1L << 26)) return None
-    val planes = Array.ofDim[Byte](nComp, mcusX * 8 * mcusY * 8)
-    val pred = new Array[Int](nComp)
-    val coef = new Array[Int](64)
-    val block = new Array[Int](64)
-    var mcu = 0
-    val nMcus = mcusX * mcusY
-    while (mcu < nMcus) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+  /** Decode one scan's entropy-coded segment into the coefficient
+    * rasters. A block in a scan whose band starts at 0 takes the DC
+    * step, and one whose band ends past 0 the AC step, so a sequential
+    * scan ([0, 63], no point transform) runs both per block. False on
+    * a corrupt stream. */
+  private def decodeOneScan(buf: Array[Byte], r: BitReader,
+                            coefs: Array[Array[Int]],
+                            blocksX: Int, blocksY: Int,
+                            scanComp: Array[Int], scanDc: Array[Int],
+                            scanAc: Array[Int],
+                            dcTab: Array[Huff], acTab: Array[Huff],
+                            ss: Int, se: Int, ah: Int, al: Int,
+                            restartInterval: Int): Boolean = {
+    val ns = scanComp.length
+    val pred = new Array[Int](ns)
+    var eobrun = 0
+    val nUnits = blocksX * blocksY // 1×1 factors: same raster per comp
+    var unit = 0
+    while (unit < nUnits) {
+      if (restartInterval > 0 && unit > 0 &&
+          unit % restartInterval == 0) {
         // resync: align to the RSTn marker and reset predictors
-        r.align()
-        r.hitMarker = false
+        r.align(); r.hitMarker = false
         var p = r.pos
         while (p + 1 < buf.length &&
                !((buf(p) & 0xFF) == 0xFF &&
                  (buf(p + 1) & 0xFF) >= 0xD0 &&
                  (buf(p + 1) & 0xFF) <= 0xD7)) p += 1
-        if (p + 1 >= buf.length) return None
+        if (p + 1 >= buf.length) return false
         r.pos = p + 2
         java.util.Arrays.fill(pred, 0)
+        eobrun = 0
       }
-      val my = mcu / mcusX
-      val mx = mcu % mcusX
-      var ci = 0
-      while (ci < nComp) {
-        java.util.Arrays.fill(coef, 0)
-        val dh = dcTab(scanDc(ci)); val ah = acTab(scanAc(ci))
-        if (dh == null || ah == null) return None
-        val t = r.huffDecode(dh)
-        if (t < 0 || t > 15) return None
-        pred(ci) += r.receiveExtend(t)
-        val q = quant(compQ(ci))
-        coef(0) = pred(ci) * q(0)
-        var k = 1
-        var eob = false
-        while (k < 64 && !eob) {
-          val rs = r.huffDecode(ah)
-          if (rs < 0) return None
-          val rrrr = rs >> 4; val ssss = rs & 0xF
-          if (ssss == 0) {
-            if (rrrr == 15) k += 16 // ZRL
-            else eob = true
-          } else {
-            k += rrrr
-            if (k > 63) return None
-            coef(ZigZag(k)) = r.receiveExtend(ssss) * q(ZigZag(k))
-            k += 1
+      // interleaved (DC or sequential): one block per comp per MCU;
+      // an AC band is single-component
+      var c = 0
+      while (c < ns) {
+        val cf = coefs(scanComp(c))
+        val base = unit * 64
+        if (ss == 0) {
+          if (ah == 0) { // first DC scan: DPCM at point transform al
+            val dh = dcTab(scanDc(c))
+            if (dh == null) return false
+            val t = r.huffDecode(dh)
+            if (t < 0 || t > 15) return false
+            pred(c) += r.receiveExtend(t)
+            cf(base) = pred(c) << al
+          } else { // refinement: one raw bit per block (G.1.2.1)
+            if (r.bit() == 1) cf(base) |= 1 << al
           }
         }
-        idct8x8(coef, block)
+        if (se > 0) {
+          val ac = acTab(scanAc(c))
+          if (ac == null) return false
+          val from = math.max(ss, 1)
+          if (ah == 0) {
+            // first AC scan (F.2.2.2, G.1.2.2): runs of zeros + EOB runs
+            if (eobrun > 0) eobrun -= 1
+            else {
+              var k = from
+              var eob = false
+              while (k <= se && !eob) {
+                val rs = r.huffDecode(ac)
+                if (rs < 0) return false
+                val run = rs >> 4; val s = rs & 0xF
+                if (s == 0) {
+                  if (run == 15) k += 16 // ZRL
+                  else {
+                    // EOBn runs exist only in AC-band scans (Ss > 0);
+                    // a sequential scan ends the block here
+                    if (ss > 0) {
+                      eobrun = (1 << run) - 1
+                      if (run > 0) eobrun += r.bitsN(run)
+                    }
+                    eob = true
+                  }
+                } else {
+                  k += run
+                  if (k > se) return false
+                  cf(base + k) = r.receiveExtend(s) << al
+                  k += 1
+                }
+              }
+            }
+          } else {
+            // AC refinement (G.1.2.3): correction bits on nonzero
+            // history, new ±1<<al coefficients on zero history
+            def correct(idx: Int): Unit = {
+              val v = cf(idx)
+              if (v != 0 && r.bit() == 1) {
+                // add one successive-approximation bit toward the sign,
+                // only if this bit of the magnitude is still clear
+                // (hostile-stream guard; conforming streams always are)
+                if (v > 0) { if ((v & (1 << al)) == 0) cf(idx) = v + (1 << al) }
+                else if ((-v & (1 << al)) == 0) cf(idx) = v - (1 << al)
+              }
+            }
+            if (eobrun > 0) {
+              eobrun -= 1
+              var k = from
+              while (k <= se) { correct(base + k); k += 1 }
+            } else {
+              var k = from
+              while (k <= se) {
+                val rs = r.huffDecode(ac)
+                if (rs < 0) return false
+                var run = rs >> 4; val s = rs & 0xF
+                var newval = 0
+                if (s == 0) {
+                  if (run != 15) { // EOBn: finish this block with
+                    eobrun = (1 << run) - 1 // corrections only
+                    if (run > 0) eobrun += r.bitsN(run)
+                    while (k <= se) { correct(base + k); k += 1 }
+                  }
+                  // run == 15: ZRL — skip 16 zero-history positions
+                } else {
+                  if (s != 1) return false // refinement sends ±1 only
+                  newval = if (r.bit() == 1) 1 << al else -(1 << al)
+                }
+                if (k <= se) {
+                  // advance over `run` zero-history positions,
+                  // consuming correction bits on nonzero history
+                  var placed = false
+                  while (k <= se && !placed) {
+                    if (cf(base + k) != 0) correct(base + k)
+                    else if (run == 0) {
+                      if (newval != 0) { cf(base + k) = newval }
+                      placed = true
+                    } else run -= 1
+                    k += 1
+                  }
+                  if (newval != 0 && !placed) return false // ran off band
+                }
+              }
+            }
+          }
+        }
+        c += 1
+      }
+      unit += 1
+    }
+    true
+  }
+
+  /** Dequantize + IDCT + crop + color convert the accumulated
+    * coefficient rasters — the one assembler for both frame types. */
+  private def finalizeImage(coefs: Array[Array[Int]],
+                            quant: Array[Array[Int]], compQ: Array[Int],
+                            width: Int, height: Int, nComp: Int,
+                            blocksX: Int, blocksY: Int,
+                            progressive: Boolean): Option[JpegImage] = {
+    val planes = Array.ofDim[Byte](nComp, blocksX * 8 * blocksY * 8)
+    val natural = new Array[Int](64)
+    val block = new Array[Int](64)
+    val stride = blocksX * 8
+    var ci = 0
+    while (ci < nComp) {
+      val q = quant(compQ(ci))
+      val cf = coefs(ci)
+      val plane = planes(ci)
+      var b = 0
+      val nBlocks = blocksX * blocksY
+      while (b < nBlocks) {
+        var k = 0
+        while (k < 64) {
+          natural(ZigZag(k)) = cf(b * 64 + k) * q(ZigZag(k))
+          k += 1
+        }
+        idct8x8(natural, block)
         // place the 8×8 block into the component plane
-        val plane = planes(ci)
-        val stride = mcusX * 8
+        val by = b / blocksX; val bx = b % blocksX
         var y = 0
         while (y < 8) {
-          val base = (my * 8 + y) * stride + mx * 8
+          val base = (by * 8 + y) * stride + bx * 8
           var x = 0
           while (x < 8) {
             plane(base + x) = block(y * 8 + x).toByte
@@ -389,24 +574,22 @@ object Jpeg {
           }
           y += 1
         }
-        ci += 1
+        b += 1
       }
-      mcu += 1
+      ci += 1
     }
     val dcQ = quant(compQ(0))(0)
     if (nComp == 1) {
       // crop the padded MCU raster to the declared dimensions
       val out = new Array[Byte](width * height)
-      val stride = mcusX * 8
       var y = 0
       while (y < height) {
         System.arraycopy(planes(0), y * stride, out, y * width, width)
         y += 1
       }
-      Some(JpegImage(width, height, 1, out, dcQ))
+      Some(JpegImage(width, height, 1, out, dcQ, progressive))
     } else {
       val out = new Array[Byte](width * height * 3)
-      val stride = mcusX * 8
       var y = 0
       while (y < height) {
         var x = 0
@@ -426,7 +609,7 @@ object Jpeg {
         }
         y += 1
       }
-      Some(JpegImage(width, height, 3, out, dcQ))
+      Some(JpegImage(width, height, 3, out, dcQ, progressive))
     }
   }
 }

@@ -225,13 +225,8 @@ object Media {
                        .orElse(decodeWav(r.content).map(w =>
                          MediaMeta("audio", 0, 0, w.sampleRate,
                            w.samples.length)))
-                       .orElse(if (Jpeg.isJpeg(r.content)) {
-                         (if (JpegProgressive.isProgressive(r.content))
-                            JpegProgressive.decode(r.content)
-                          else Jpeg.decode(r.content))
-                           .map(j => MediaMeta("image", j.width,
-                             j.height, 0, 1))
-                       } else None)
+                       .orElse(Jpeg.decode(r.content).map(j =>
+                         MediaMeta("image", j.width, j.height, 0, 1)))
                        .orElse(if (Mp3.isMp3(r.content))
                          Mp3.census(r.content).map(c =>
                            MediaMeta("audio", 0, 0, c.sampleRateHz,

@@ -630,6 +630,37 @@ object Dedup {
               col("bk.tbl").as("tbl"), col("bk.sig").as("sig"))
   }
 
+  /** Scored candidate pairs (vec_a, vec_b, cosine), vec_a < vec_b, of
+    * the multi-table cosine LSH over [[cosLshBands]] rows — the one
+    * pair builder behind [[dedupCosineLsh]] and `knn_join_lsh` in
+    * [[Vectors]]. One (tbl, sig)-bucketed collect_list + the native
+    * OrderedPairs generator computes bands ONCE, shuffles them once,
+    * and streams each bucket's pairs with no sort and no join (a band
+    * self-join evaluates the 48-dot band subtree once per side and
+    * sort-merges two corpus-sized exchanges; guide §2.4, the
+    * market_basket/jaccard treatment). array_sort orders each bucket
+    * by vec_id, so the generator's i<j pairs are exactly the oracle's
+    * a.vec_id < b.vec_id orientation (dot/nrm operand order preserved
+    * — cosines stay bit-identical). A pair that collides in several
+    * tables is emitted once per table; callers dedup after their own
+    * filter. */
+  private[graft] def cosLshPairs(bands: DataFrame): DataFrame = {
+    import graft.functions.VectorOps._
+    import org.apache.spark.sql.graft.Bridge
+    val buckets = bands
+      .groupBy("tbl", "sig")
+      .agg(array_sort(collect_list(
+        struct(col("vec_id"), col("v"), col("nrm")))).as("docs"))
+      .filter(size(col("docs")) >= 2)
+    val pairGen = Bridge.column(graft.functions.expressions.OrderedPairs(
+      Bridge.expression(col("docs"))))
+    buckets
+      .select(pairGen.as(Seq("vec_a", "va", "na", "vec_b", "vb", "nb")))
+      .select(col("vec_a"), col("vec_b"),
+              (dotNative(col("va"), col("vb")) /
+                (col("na") * col("nb"))).as("cosine"))
+  }
+
   val dedupCosineLsh: Q = Q(
     "dedup_cosine_lsh",
     cosineLshOracleSql(CosLshPlanesPerTable)
@@ -638,32 +669,9 @@ object Dedup {
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       toDouble(col("embedding")).as("v"))
     val bands = cosLshBands(e, cosLshPpt(s, d))
-    // r12 shape (guide §2.4, the market_basket/jaccard treatment): the
-    // band SELF-JOIN evaluated the 48-dot band subtree twice (once per
-    // side) and at scale sort-merges two corpus-sized exchanges; one
-    // (tbl, sig)-bucketed collect_list + the native OrderedPairs
-    // generator computes bands ONCE, shuffles them once, and streams
-    // each bucket's pairs with no sort and no join. array_sort orders
-    // each bucket by vec_id, so the generator's i<j pairs are exactly
-    // the old a.vec_id < b.vec_id orientation (dot/nrm operand order
-    // preserved — cosines stay bit-identical). cosine + τ-filter still
-    // run BEFORE the pair-dedup exchange, which carries only passing
-    // (id, id, double) rows.
-    val buckets = bands
-      .groupBy("tbl", "sig")
-      .agg(array_sort(collect_list(
-        struct(col("vec_id"), col("v"), col("nrm")))).as("docs"))
-      .filter(size(col("docs")) >= 2)
-    val pairGen = {
-      import org.apache.spark.sql.graft.Bridge
-      Bridge.column(graft.functions.expressions.OrderedPairs(
-        Bridge.expression(col("docs"))))
-    }
-    buckets
-      .select(pairGen.as(Seq("vec_a", "va", "na", "vec_b", "vb", "nb")))
-      .select(col("vec_a"), col("vec_b"),
-              (dotNative(col("va"), col("vb")) /
-                (col("na") * col("nb"))).as("cosine"))
+    // cosine + τ-filter run BEFORE the pair-dedup exchange, which
+    // carries only passing (id, id, double) rows
+    cosLshPairs(bands)
       .filter(col("cosine") >= 0.45)
       .dropDuplicates("vec_a", "vec_b")
   }.copy(oracleGen = Some(() => Some(cosineLshOracleSql(

@@ -1349,18 +1349,20 @@ object Multimodal {
         "free_bytes", "uses_largesize", "total_bytes")
   }
 
-  /** PROGRESSIVE JPEG round trip — the last documented image-codec
-    * cut, closed: the same constant-8×8-block gray image as
-    * [[multimodalJpeg]] is JDK-encoded as a PROGRESSIVE stream
+  /** PROGRESSIVE JPEG round trip: the same constant-8×8-block gray
+    * image as [[multimodalJpeg]] is JDK-encoded as a PROGRESSIVE stream
     * (libjpeg's 6-scan gray script: spectral selection + successive
     * approximation in both DC and AC, EOB runs) and decoded back
-    * through the hand-written Annex G decoder
-    * ([[graft.multimodal.JpegProgressive]]). Because successive
-    * approximation is lossless once all scans complete, the decoded
-    * pixels must be BIT-IDENTICAL to the baseline path's — the row
-    * REQUIREs it against a per-row baseline encode+decode
-    * (`bit_equal`), and the exact-tier oracle predicts the decoded
-    * levels with the same integer arithmetic as `multimodal_jpeg`.
+    * through [[graft.multimodal.Jpeg]], the one decoder for baseline
+    * and progressive frames. Its sequential and progressive scan
+    * decoders fill the same coefficient raster, which one assembler
+    * turns into pixels; because successive approximation is lossless
+    * once all scans complete, the progressive stream's pixels must be
+    * BIT-IDENTICAL to the baseline encode's — the row REQUIREs it
+    * against a per-row baseline encode+decode (`bit_equal`), so the
+    * flag compares the two scan decoders over the shared assembler.
+    * The exact-tier oracle predicts the decoded levels with the same
+    * integer arithmetic as `multimodal_jpeg`.
     * `n_scans` locks the encoder's scan script the way `dc_q` locks
     * its quant table: a JDK behavior change fails loudly.
     *
@@ -1395,7 +1397,7 @@ object Multimodal {
        |ORDER BY doc_id""".stripMargin
   ) { (s, d) =>
     import s.implicits._
-    import graft.multimodal.{Jpeg, JpegProgressive}
+    import graft.multimodal.Jpeg
     Tables.documents(s, d)
       .filter(length(col("text")) > 0)
       .select(col("doc_id"), col("text"))
@@ -1404,10 +1406,10 @@ object Multimodal {
         rows.map { case (id, text) =>
           val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           val (bw, bh, prog) = synthJpegProg(bytes)
-          require(JpegProgressive.isProgressive(prog),
-            s"JDK writer stopped emitting SOF2 for doc $id")
-          val dec = JpegProgressive.decode(prog).getOrElse(
+          val dec = Jpeg.decode(prog).getOrElse(
             sys.error(s"progressive decode failed for doc $id"))
+          require(dec.progressive,
+            s"JDK writer stopped emitting SOF2 for doc $id")
           require(dec.dcQuant == JpegDcQ && dec.nComp == 1 &&
             dec.width == bw * 8 && dec.height == bh * 8,
             s"JDK encoder drifted: Q=${dec.dcQuant} dims=" +

@@ -207,37 +207,18 @@ object Vectors {
     // is the explicit override, and the oracle re-renders post-run from
     // the width actually used
     val bands = Dedup.cosLshBands(e, Dedup.cosLshPpt(s, d))
-    // each unordered pair pays its cosine ONCE (a < b, as in
-    // dedupCosineLsh), then both directed edges emit from a one-pass
-    // explode — bit-exact vs the oracle's <> join because cosine is
-    // symmetric at the bit level (per-term products and the norm product
-    // commute). r12: candidates come from the same (tbl, sig)-bucketed
-    // collect_list + OrderedPairs shape as dedupCosineLsh (bands
-    // computed and shuffled once, no self-join sort; array_sort keeps
-    // the a < b orientation and operand order, cosines bit-identical).
-    val buckets = bands
-      .groupBy("tbl", "sig")
-      .agg(array_sort(collect_list(
-        struct(col("vec_id"), col("v"), col("nrm")))).as("docs"))
-      .filter(size(col("docs")) >= 2)
-    val pairGen = {
-      import org.apache.spark.sql.graft.Bridge
-      Bridge.column(graft.functions.expressions.OrderedPairs(
-        Bridge.expression(col("docs"))))
-    }
-    val cand = buckets
-      .select(pairGen.as(Seq("va", "v_a", "na", "vb", "v_b", "nb")))
-      // cosine BEFORE the pair dedup, as in dedupCosineLsh: multi-table
-      // re-collisions re-verify map-side, the exchange carries only
-      // (id, id, cosine)
-      .select(col("va"), col("vb"),
-              (dotNative(col("v_a"), col("v_b")) /
-                (col("na") * col("nb"))).as("c"))
+    // each unordered pair pays its cosine ONCE (a < b, from the shared
+    // Dedup.cosLshPairs builder), then both directed edges emit from a
+    // one-pass explode — bit-exact vs the oracle's <> join because
+    // cosine is symmetric at the bit level (per-term products and the
+    // norm product commute). The cosine runs BEFORE the pair dedup, as
+    // in dedupCosineLsh: multi-table re-collisions re-verify map-side.
+    val cand = Dedup.cosLshPairs(bands)
       .select(explode(array(
-        struct(col("va").as("vec_id"), col("vb").as("nn_id"),
-               col("c").as("cosine")),
-        struct(col("vb").as("vec_id"), col("va").as("nn_id"),
-               col("c").as("cosine")))).as("e"))
+        struct(col("vec_a").as("vec_id"), col("vec_b").as("nn_id"),
+               col("cosine")),
+        struct(col("vec_b").as("vec_id"), col("vec_a").as("nn_id"),
+               col("cosine")))).as("e"))
       .select(col("e.vec_id").as("vec_id"), col("e.nn_id").as("nn_id"),
               col("e.cosine").as("cosine"))
     val w = org.apache.spark.sql.expressions.Window
@@ -3262,6 +3243,19 @@ object Vectors {
   private val NswHops = 8
   private val NswEf = 8
 
+  /** Cosine inside the NSW walks' tasks: the same left-to-right fold
+    * as the native cosine_sim codegen, so the oracle's kernel bits are
+    * preserved. */
+  private def nswCos(x: Array[Double], y: Array[Double]): Double = {
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < x.length) {
+      val xi = x(i); val yi = y(i)
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
+
   /** Trained NSW artifact: the directed kNN graph over the capped base
     * set (each base's [[NswK]] nearest bases by cosine, id tie-break) —
     * memoized per corpus fingerprint like the IVF centroids. */
@@ -3617,15 +3611,6 @@ object Vectors {
     val walked = q.as[(Long, Seq[Double])].mapPartitions { it =>
       val adjM = adjB.value
       val vecM = vecB.value
-      def cos(x: Array[Double], y: Array[Double]): Double = {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-        while (i < x.length) {
-          val xi = x(i); val yi = y(i)
-          dot += xi * yi; nx += xi * xi; ny += yi * yi
-          i += 1
-        }
-        dot / (math.sqrt(nx) * math.sqrt(ny))
-      }
       it.flatMap { case (qid, qvSeq) =>
         val qv = qvSeq.toArray
         efs.map { ef =>
@@ -3633,7 +3618,7 @@ object Vectors {
           for (_ <- 1 to hops) {
             frontier = frontier
               .flatMap(c => c +: adjM(c).toSeq).distinct
-              .map(n => (cos(vecM(n), qv), n))
+              .map(n => (nswCos(vecM(n), qv), n))
               .sortWith((a, b) =>
                 a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
               .take(ef).map(_._2)
@@ -3742,15 +3727,6 @@ object Vectors {
     val walked = q.as[(Long, Seq[Double])].mapPartitions { it =>
       val adjM = adjB.value
       val vecM = vecB.value
-      def cos(x: Array[Double], y: Array[Double]): Double = {
-        var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-        while (i < x.length) {
-          val xi = x(i); val yi = y(i)
-          dot += xi * yi; nx += xi * xi; ny += yi * yi
-          i += 1
-        }
-        dot / (math.sqrt(nx) * math.sqrt(ny))
-      }
       it.map { case (qid, qvSeq) =>
         val qv = qvSeq.toArray
         var frontier: Seq[Long] = Seq(entry)
@@ -3759,12 +3735,12 @@ object Vectors {
           prev = frontier
           frontier = frontier
             .flatMap(c => c +: adjM(c).toSeq).distinct
-            .map(n => (cos(vecM(n), qv), n))
+            .map(n => (nswCos(vecM(n), qv), n))
             .sortWith((a, b) =>
               a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
             .take(ef).map(_._2)
         }
-        (qid, frontier.head, cos(vecM(frontier.head), qv), frontier,
+        (qid, frontier.head, nswCos(vecM(frontier.head), qv), frontier,
           prev.sorted == frontier.sorted)
       }
     }.toDF("query_id", "nsw_id", "nsw_cos", "beam", "converged")

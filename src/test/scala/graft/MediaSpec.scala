@@ -78,6 +78,35 @@ class MediaSpec extends SparkSpec {
     assert(out(2).meta === MediaMeta("audio", 640, 480, 16000, 3))
   }
 
+  test("baseline and progressive JPEGs decode to their dimensions") {
+    val spark2 = spark
+    import spark2.implicits._
+    // gray: the hand-written decoder takes 1×1 sampling only, and the
+    // JDK writer subsamples color by default
+    def jpeg(w: Int, h: Int, progressive: Boolean): Array[Byte] = {
+      val img = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      for (y <- 0 until h; x <- 0 until w)
+        img.getRaster.setSample(x, y, 0, (x * 7 + y * 13) % 256)
+      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
+      val p = wr.getDefaultWriteParam
+      if (progressive)
+        p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      wr.setOutput(ios)
+      wr.write(null, new javax.imageio.IIOImage(img, null, null), p)
+      ios.close(); wr.dispose()
+      bos.toByteArray
+    }
+    val rows = Seq(MediaRow(20, "image", jpeg(37, 29, progressive = false)),
+                   MediaRow(21, "image", jpeg(17, 51, progressive = true)))
+      .toDS()
+    val out = Media.decode(rows).collect().sortBy(_.media_id)
+    assert(out(0).meta === MediaMeta("image", 37, 29, 0, 1))
+    assert(out(1).meta === MediaMeta("image", 17, 51, 0, 1))
+  }
+
   /** Gradient image with an optional small perturbation — the dHash
     * fixture: perceptually near-identical variants must land within a
     * few bits; an inverted gradient must land far away. */
